@@ -61,6 +61,16 @@ read-retry in ``_read_manifest``.
 All filesystem access goes through the Hadoop FileSystem API (driver-side
 metadata ops only — file counts, renames, one small JSON per commit), so
 the same code runs on local disk, HDFS, or object stores.
+
+Every data read hands Spark an explicit schema, so no read samples a
+parquet footer (schema inference costs one Spark job per read):
+committed files are read with the manifest's recorded ``schema`` in
+physical column names (``_scan``), a commit's staged files with the
+schema of the frame it just wrote, deletion-vector sidecars with the
+fixed ``_DV_SCHEMA``. The recorded schema is the union over additive
+evolution, so files that predate a column read it as typed NULLs.
+Only manifests written before schema tracking (no ``schema`` key) fall
+back to inference.
 """
 
 from __future__ import annotations
@@ -76,6 +86,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _LOG = "_log"
 _DATA = "data"
@@ -83,6 +94,7 @@ _DV = "dv"  # deletion-vector sidecar dirs (merge-on-read deletes)
 _BUCKETVIEW = "_bucketview"  # per-version hardlink views for bucketed reads
 _BLOOM_WIDTH = 2048  # bits per probe stripe
 _BLOOM_DEPTH = 4  # probes per key
+_DV_SCHEMA = "__file STRING, __pos LONG"  # deletion-vector sidecar rows
 
 
 def _plain(v):
@@ -143,6 +155,35 @@ def _data_path(table_dir: str, rel: str) -> str:
     if rel.startswith("/") or "://" in rel:
         return rel
     return f"{table_dir}/{rel}"
+
+
+def _scan(
+    spark: SparkSession, table_dir: str, manifest: dict, rels, merge_schema=False
+) -> DataFrame:
+    """Parquet scan of ``manifest``'s data files ``rels`` with the schema
+    the manifest records, in the PHYSICAL names the files carry (see
+    ``_apply_mapping`` for the logical side). Spark samples no footer,
+    and files missing a later-added column read it as typed NULLs.
+    Manifests without a recorded schema fall back to inference
+    (unioning every file's schema when ``merge_schema``)."""
+    reader = spark.read
+    schema = manifest.get("schema")
+    if schema:
+        m = _mapping(manifest) or {}
+        reader = reader.schema(
+            T.StructType.fromJson(
+                dict(
+                    schema,
+                    fields=[
+                        dict(f, name=m.get(f["name"], f["name"]))
+                        for f in schema["fields"]
+                    ],
+                )
+            )
+        )
+    elif merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*(_data_path(table_dir, rel) for rel in rels))
 
 
 def _fs(spark: SparkSession, path: str):
@@ -467,7 +508,7 @@ def write_snapshot(
     Bloom probe still prunes every file that provably lacks the key —
     ``read_snapshot(point={"col": v})`` opens ~1 file instead of all of
     them on a hash-distributed key. Built distributed (see
-    ``_collect_staged_blooms``); never a false negative (files that lose
+    ``_staged_meta``); never a false negative (files that lose
     their bloom through compaction/COW-rewrite are simply kept).
     """
     if mode not in ("append", "overwrite"):
@@ -626,58 +667,19 @@ def write_snapshot(
         else:
             committed_schema = parent_schema
 
-    if validated:
-        staged = spark.read.parquet(staging)
-        if mode == "append" and parent_mapping:
-            # constraint expressions speak LOGICAL names; the staged
-            # files carry physical ones — alias back for validation
-            for lg, ph in parent_mapping.items():
-                if lg != ph and ph in staged.columns:
-                    staged = staged.withColumnRenamed(ph, lg)
-        for cname, cexpr in sorted(validated.items()):
-            bad = staged.filter(~F.coalesce(F.expr(cexpr), F.lit(True))).count()
-            if bad:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-                raise ValueError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by "
-                    f"{bad} staged row(s) — commit refused, nothing written"
-                )
-
-    # one grouped agg over the staged files collects row counts (always)
-    # and min/max/non-null (when stats_cols): with no stats_cols the scan
-    # touches zero data columns, so parquet serves it from row-group
-    # metadata; the non-null count is what makes stats-only COUNT-WHERE
-    # exact for fully-contained files
-    staged_stats, staged_rows = _collect_staged_stats(
-        spark, staging, list(stats_cols)
+    _check_constraints(
+        spark, staging, stage_frame.schema, validated,
+        "staged row(s) — commit refused", lambda: fs.delete(Path(staging), True),
+        mapping=parent_mapping if mode == "append" else None,
     )
 
-    staged_blooms = _collect_staged_blooms(
-        spark, staging, bloom_cols, bloom_width, bloom_depth
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"c{tag}",
+        _staged_meta(
+            spark, staging, stage_frame.schema, list(stats_cols),
+            {c: (bloom_width, bloom_depth) for c in bloom_cols},
+        ),
     )
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    # recursive walk: a partitioned staging tree nests files one hive
-    # level per spec column; names flatten into data/ (part numbers can
-    # repeat across partition dirs, the i-counter disambiguates)
-    for i, st in enumerate(_walk_staged(fs, jvm, staging)):
-        name = _staged_key(st.getPath().toString(), staging)
-        rel = f"{_DATA}/c{tag}-{i}-{name.rsplit('/', 1)[-1]}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        # a 0-row file forms no group in the count agg: it has zero rows
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
 
     # 2. optimistic manifest commit (bounded: losing the create race 100
     # times in a row means the "conflict" is really a persistent error —
@@ -900,8 +902,13 @@ def read_snapshot(
     caller still applies the actual row filter (and should — skipping is
     file-granular). ``None`` bounds are open-ended.
 
-    ``merge_schema=True`` unions file schemas (additive schema evolution
-    across commits — older files yield NULLs for later-added columns).
+    The scan takes its schema from the manifest (no footer is sampled):
+    after additive schema evolution every read returns the recorded
+    union schema, and older files yield typed NULLs for later-added
+    columns. ``merge_schema=True`` matters only for manifests that
+    record no schema (written before schema tracking): it makes Spark
+    union the file schemas instead of sampling one footer. It is still
+    refused on a table with deletion vectors.
 
     ``as_of_ts`` (epoch seconds; mutually exclusive with ``version``)
     resolves the version by commit time via ``version_as_of`` — the
@@ -1014,15 +1021,12 @@ def read_snapshot(
             )
             eqp = {e: (val, val)}
             kept = [rel for rel in kept if _overlaps(stats.get(rel), eqp)]
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    if not kept:
-        if rels:  # everything skipped: empty frame, real schema
-            return _apply_mapping(
-                reader.parquet(_data_path(table_dir, rels[0])).limit(0), manifest
-            )
-        return reader.parquet(f"{table_dir}/{_DATA}").limit(0)
+    if not kept:  # everything skipped: empty frame, real schema
+        return _apply_mapping(
+            _scan(spark, table_dir, manifest, rels[:1] or [_DATA], merge_schema)
+            .limit(0),
+            manifest,
+        )
     if manifest.get("dvs") and not merge_schema:
         # merge-on-read: anti-join the deletion vectors at scan time
         # (files without a DV entry scan plain; fully-deleted files are
@@ -1036,7 +1040,7 @@ def read_snapshot(
             "vectors is unsupported — run materialize_dvs() first"
         )
     return _apply_mapping(
-        reader.parquet(*(_data_path(table_dir, rel) for rel in kept)), manifest
+        _scan(spark, table_dir, manifest, kept, merge_schema), manifest
     )
 
 
@@ -1115,8 +1119,6 @@ def read_snapshot_bucketed(
             except FileExistsError:
                 pass  # concurrent reader linked the same version: identical
 
-    from pyspark.sql import types as T
-
     schema = man.get("schema")
     if not schema:
         raise ValueError(f"{table_dir} v{head} has no tracked schema")
@@ -1161,9 +1163,7 @@ def read_changes(
         if man["added"]:
             frames.append(
                 _apply_mapping(
-                    spark.read.parquet(
-                        *(_data_path(table_dir, rel) for rel in man["added"])
-                    ),
+                    _scan(spark, table_dir, man, man["added"]),
                     man,  # each version resolves its OWN logical names
                 ).withColumn("_commit_version", F.lit(v).cast("long"))
             )
@@ -1383,75 +1383,150 @@ def _walk_staged(fs, jvm, staging: str):
     return sorted(out, key=lambda s: s.getPath().toString())
 
 
-def _collect_staged_stats(spark, staging: str, stats_cols: list[str]):
-    """One grouped agg over a staging dir: per-file row counts (always)
-    and [min, max, nonnull] per stats column. Shared by the commit
-    paths."""
-    staged_stats: dict[str, dict] = {}
-    staged_rows: dict[str, int] = {}
+def _staged_meta(
+    spark, staging: str, schema, stats_cols, bloom_specs: dict
+) -> tuple[dict, dict, dict]:
+    """Per-file metadata of a staging dir from ONE grouped aggregate
+    keyed by ``input_file_name()``, read with the ``schema`` of the frame
+    the caller just wrote there (no footer sampled). Returns
+    ``(stats, rows, blooms)`` keyed by ``_staged_key``:
+
+    - ``rows``: row count per file (always; a 0-row file forms no group
+      and is absent — it has zero rows). With no stats or bloom columns
+      the scan touches zero data columns, so parquet answers it from
+      row-group metadata.
+    - ``stats``: ``[min, max, nonnull]`` per stats column (derived
+      transform labels compute via ``_stats_expr``); the non-null count
+      is what makes stats-only COUNT-WHERE exact for contained files.
+    - ``blooms``: a Bloom filter per column of ``bloom_specs``
+      (``{col: (width, depth)}``) — an Iceberg-Puffin-style secondary
+      index for point lookups on columns the data is NOT clustered by,
+      where min/max stats span everything and skip nothing. Partitioned
+      layout: probe i owns its own ``width``-bit stripe, the exact layout
+      of ``operators/sketches.bloom_might_contain``. The aggregate
+      collects each probe's distinct bit positions per file (at most
+      ``width`` each, so the collect is files × ≤ depth·width longs —
+      metadata scale, whatever the row count), which are ORed into
+      words here and stored SPARSE (``{word_index: int64}``) so a
+      low-cardinality file costs bytes, not the full bitmap."""
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in stats_cols:
-        e = _stats_expr(c)  # derived-transform labels compute here
+        e = _stats_expr(c)
         aggs += [
             F.min(e).alias(f"min__{c}"),
             F.max(e).alias(f"max__{c}"),
             F.count(e).alias(f"nn__{c}"),
         ]
+    for c, (w, d) in bloom_specs.items():
+        aggs += [
+            F.collect_set(
+                F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(w).cast("long"))
+            ).alias(f"bl{i}__{c}")
+            for i in range(d)
+        ]
+    stats: dict[str, dict] = {}
+    rows: dict[str, int] = {}
+    blooms: dict[str, dict] = {}
     for r in (
-        spark.read.parquet(staging)
+        spark.read.schema(schema)
+        .parquet(staging)
         .groupBy(F.input_file_name().alias("__file"))
         .agg(*aggs)
         .collect()
     ):
         name = _staged_key(r["__file"], staging)
-        staged_rows[name] = int(r["__rows"])
+        rows[name] = int(r["__rows"])
         if stats_cols:
-            staged_stats[name] = {
+            stats[name] = {
                 c: [_plain(r[f"min__{c}"]), _plain(r[f"max__{c}"]), int(r[f"nn__{c}"])]
                 for c in stats_cols
             }
-    return staged_stats, staged_rows
+        for c, (w, d) in bloom_specs.items():
+            words: dict[int, int] = {}
+            for i in range(d):
+                for h in r[f"bl{i}__{c}"]:
+                    pos = i * w + h
+                    words[pos // 64] = words.get(pos // 64, 0) | 1 << pos % 64
+            blooms.setdefault(name, {})[c] = {
+                "w": w,
+                "d": d,
+                # stored as signed int64, like Spark's bit_or of longs
+                "words": {
+                    str(k): v - (1 << 64) if v >> 63 else v
+                    for k, v in sorted(words.items())
+                },
+            }
+    return stats, rows, blooms
 
 
-def _collect_staged_blooms(
-    spark, staging: str, bloom_cols, width: int, depth: int
-) -> dict[str, dict]:
-    """Per-file Bloom filter words for each named column — an
-    Iceberg-Puffin-style secondary file index for point lookups on
-    columns the data is NOT clustered by (where min/max stats span
-    everything and skip nothing). Computed DISTRIBUTED: each key
-    explodes into its ``depth`` probe positions (partitioned bloom:
-    probe i owns its own ``width``-bit stripe, the exact layout of
-    ``operators/sketches.bloom_might_contain``), then one
-    map-side-combined ``bit_or`` grouped by (file, word index). The
-    collect is files × ≤ depth·width/64 rows — metadata scale. Words
-    are stored SPARSE ({word_index: int64}) so a low-cardinality file
-    costs bytes, not the full bitmap."""
-    out: dict[str, dict] = {}
-    if not bloom_cols:
-        return out
-    df = spark.read.parquet(staging)
-    for c in bloom_cols:
-        pos = F.array(
-            *[
-                F.lit(i * width).cast("long")
-                + F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(width).cast("long"))
-                for i in range(depth)
-            ]
-        )
-        rows = (
-            df.select(F.input_file_name().alias("__file"), F.explode(pos).alias("pos"))
-            .groupBy("__file", F.expr("cast(pos div 64 as int)").alias("wi"))
-            .agg(F.expr("bit_or(shiftleft(1L, cast(pmod(pos, 64) as int)))").alias("w"))
-            .collect()
-        )
-        for r in rows:
-            name = _staged_key(r["__file"], staging)
-            entry = out.setdefault(name, {}).setdefault(
-                c, {"w": width, "d": depth, "words": {}}
+def _move_staged(fs, jvm, table_dir: str, staging: str, prefix: str, meta):
+    """Commit step 1 shared by every writing path: rename each staged
+    parquet file under ``data/`` as ``{prefix}-{i}-{name}`` and remove
+    the staging dir. ``meta`` is ``_staged_meta``'s result; returns
+    ``(new_files, new_stats, new_blooms, new_rows)`` keyed by the
+    committed relative paths. The walk is recursive: a partitioned
+    staging tree nests files one hive level per spec column, and names
+    flatten into data/ (part numbers can repeat across partition dirs,
+    the i-counter disambiguates)."""
+    Path = jvm.org.apache.hadoop.fs.Path
+    staged_stats, staged_rows, staged_blooms = meta
+    fs.mkdirs(Path(f"{table_dir}/{_DATA}"))
+    new_files: list[str] = []
+    new_stats: dict[str, dict] = {}
+    new_blooms: dict[str, dict] = {}
+    new_rows: dict[str, int] = {}
+    for i, st in enumerate(_walk_staged(fs, jvm, staging)):
+        name = _staged_key(st.getPath().toString(), staging)
+        rel = f"{_DATA}/{prefix}-{i}-{name.rsplit('/', 1)[-1]}"
+        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
+            raise IOError(f"rename failed for {name} -> {rel}")
+        new_files.append(rel)
+        if name in staged_stats:
+            new_stats[rel] = staged_stats[name]
+        if name in staged_blooms:
+            new_blooms[rel] = staged_blooms[name]
+        new_rows[rel] = staged_rows.get(name, 0)
+    fs.delete(Path(staging), True)
+    return new_files, new_stats, new_blooms, new_rows
+
+
+def _check_constraints(
+    spark, staging: str, schema, constraints: dict, what: str, undo, mapping=None
+) -> None:
+    """CHECK validation of the rows staged under ``staging`` (written
+    with ``schema``) — Delta semantics: a row violates when the
+    expression is FALSE; NULL passes. Every constraint is counted in one
+    aggregate, and a table without constraints reads nothing. On a
+    violation ``undo()`` removes what the caller staged and the first
+    violated constraint (by name) raises. ``mapping`` (logical →
+    physical) aliases a column-mapped table's physical staged columns
+    back to the LOGICAL names constraint expressions speak."""
+    if not constraints:
+        return
+    staged = spark.read.schema(schema).parquet(staging)
+    for lg, ph in (mapping or {}).items():
+        if lg != ph and ph in staged.columns:
+            staged = staged.withColumnRenamed(ph, lg)
+    names = sorted(constraints)
+    counts = staged.agg(
+        *[
+            F.count(F.when(~F.coalesce(F.expr(constraints[n]), F.lit(True)), 1))
+            for n in names
+        ]
+    ).first()
+    for n, bad in zip(names, counts):
+        if bad:
+            undo()
+            raise ValueError(
+                f"CHECK constraint {n!r} ({constraints[n]}) violated by "
+                f"{bad} {what}, nothing written"
             )
-            entry["words"][str(int(r["wi"]))] = int(r["w"])
-    return out
+
+
+def _stats_cols(manifest: dict) -> list[str]:
+    """Every column some file of ``manifest`` carries min/max stats for —
+    what a rewrite recomputes for its replacement files."""
+    return sorted({c for s in manifest.get("stats", {}).values() for c in s})
 
 
 def _bloom_specs(manifest: dict) -> dict[str, tuple[int, int]]:
@@ -1463,16 +1538,6 @@ def _bloom_specs(manifest: dict) -> dict[str, tuple[int, int]]:
         for c, ent in e.items():
             specs.setdefault(c, (ent["w"], ent["d"]))
     return specs
-
-
-def _recompute_staged_blooms(spark, staging: str, specs: dict) -> dict[str, dict]:
-    """Rebuild per-file blooms for a rewrite's staged files, one indexed
-    column at a time (each at its own recovered dial)."""
-    out: dict[str, dict] = {}
-    for c, (w, d) in sorted(specs.items()):
-        for name, entry in _collect_staged_blooms(spark, staging, [c], w, d).items():
-            out.setdefault(name, {}).update(entry)
-    return out
 
 
 def _point_hashes(
@@ -1592,7 +1657,7 @@ def optimize_snapshot(
         raise FileNotFoundError(f"{table_dir} has no committed snapshots")
     manifest = _read_manifest(fs, jvm, table_dir, head)
     _refuse_mapping(manifest, "optimize_snapshot")
-    stats_cols = sorted({c for s in manifest.get("stats", {}).values() for c in s})
+    stats_cols = _stats_cols(manifest)
 
     if min_file_mb is not None and not cluster_by and not zorder_by and not hilbert_by:
         dv_set = set(manifest.get("dvs", {}))
@@ -1610,33 +1675,17 @@ def optimize_snapshot(
         n = max(1, math.ceil(sum(sizes[r] for r in small) / (target_mb * 1024 * 1024)))
         tag = uuid.uuid4().hex[:12]
         staging = f"{table_dir}/staging-{tag}"
-        small_df = spark.read.parquet(
-            *(_data_path(table_dir, rel) for rel in small)
-        ).coalesce(n)
+        small_df = _scan(spark, table_dir, manifest, small).coalesce(n)
         # a partitioned table's compaction regroups by the spec (the hive
         # split in staging restores one-value-per-file, so the recomputed
         # min==max stats keep partition pruning exact)
         _stage_df(small_df, staging, manifest.get("partition_spec") or ())
-        staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-        staged_blooms = _recompute_staged_blooms(
-            spark, staging, _bloom_specs(manifest)
+        new_files, new_stats, new_blooms, new_rows = _move_staged(
+            fs, jvm, table_dir, staging, f"o{tag}",
+            _staged_meta(
+                spark, staging, small_df.schema, stats_cols, _bloom_specs(manifest)
+            ),
         )
-        new_files: list[str] = []
-        new_stats: dict[str, dict] = {}
-        new_blooms: dict[str, dict] = {}
-        new_rows: dict[str, int] = {}
-        for i, st in enumerate(_walk_staged(fs, jvm, staging)):
-            name = _staged_key(st.getPath().toString(), staging)
-            rel = f"{_DATA}/o{tag}-{i}-{name.rsplit('/', 1)[-1]}"
-            if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-                raise IOError(f"rename failed for {name} -> {rel}")
-            new_files.append(rel)
-            if name in staged_stats:
-                new_stats[rel] = staged_stats[name]
-            if name in staged_blooms:
-                new_blooms[rel] = staged_blooms[name]
-            new_rows[rel] = staged_rows.get(name, 0)
-        fs.delete(Path(staging), True)
 
         small_set = set(small)
         for _attempt in range(100):
@@ -1713,20 +1762,9 @@ def optimize_snapshot(
         for rel in manifest["files"]
     )
     n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    # read with the manifest's union schema, so an additively evolved
+    # table keeps its later-added columns through the rewrite
     current = read_snapshot(spark, table_dir, version=head)
-    tracked = manifest.get("schema")
-    if tracked and set(
-        f["name"] for f in tracked.get("fields", [])
-    ) - set(current.columns):
-        # additive schema evolution left older files lacking the newer
-        # columns: a plain multi-schema read samples one footer and would
-        # NARROW the rewrite to it — a maintenance op silently dropping
-        # columns table-wide (r6 fix). Re-read with schema merging; on a
-        # DV-carrying evolved table read_snapshot raises loudly
-        # (materialize first) instead of losing data.
-        current = read_snapshot(
-            spark, table_dir, version=head, merge_schema=True
-        )
     if cluster_by:
         current = current.repartitionByRange(n, *cluster_by).sortWithinPartitions(
             *cluster_by
@@ -2092,9 +2130,7 @@ def delete_where(
     hit_files: list[str] = []
     rows_deleted = 0
     if candidates:
-        cand_df = spark.read.parquet(
-            *(_data_path(table_dir, rel) for rel in candidates)
-        )
+        cand_df = _scan(spark, table_dir, manifest, candidates)
         probe = (
             cand_df.filter(cond)
             .groupBy(F.input_file_name().alias("__file"))
@@ -2117,58 +2153,24 @@ def delete_where(
     # were ignored"); nothing ever lists the table root, so visibility
     # costs nothing and the stats read is on defined behavior
     staging = f"{table_dir}/staging-{tag}"
+    meta: tuple[dict, dict, dict] = ({}, {}, {})
     if hit_files:
-        # mergeSchema: the hit set can span an additive schema-evolution
-        # boundary — a single-footer read would rewrite the newer files
-        # WITHOUT their later-added columns (r6 fix; uniform tables are
-        # unaffected, older files rewrite with typed NULLs which is the
-        # documented merge_schema read semantics)
-        survivors = spark.read.option("mergeSchema", "true").parquet(
-            *(_data_path(table_dir, rel) for rel in hit_files)
+        # the manifest's union schema: the hit set can span an additive
+        # schema-evolution boundary, and older files rewrite with typed
+        # NULLs for the later-added columns
+        survivors = _scan(
+            spark, table_dir, manifest, hit_files, merge_schema=True
         ).filter(~cond | cond.isNull())
         survivors.write.parquet(staging)
+        meta = _staged_meta(
+            spark, staging, survivors.schema, _stats_cols(manifest),
+            _bloom_specs(manifest),
+        )
     else:
         fs.mkdirs(Path(staging))  # drop-only delete: nothing to rewrite
-
-    stats_cols = sorted({c for s in stats.values() for c in s})
-    staged_stats: dict[str, dict] = {}
-    staged_rows: dict[str, int] = {}
-    staged_blooms: dict[str, dict] = {}
-    if hit_files:
-        # shared helper (r6 dedup of a drifted inline copy — the drift was
-        # an F.col on derived-transform labels, found by the composition
-        # model test): _stats_expr computes transform labels exactly as
-        # the append path does; flat staging keys == bare basenames
-        staged_stats, staged_rows = _collect_staged_stats(
-            spark, staging, stats_cols
-        )
-        staged_blooms = _recompute_staged_blooms(
-            spark, staging, _bloom_specs(manifest)
-        )
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s: s.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/d{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        # a 0-row file forms no group in the count agg: it has zero rows
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"d{tag}", meta
+    )
 
     hit_set = set(hit_files) | set(drop)
     for _attempt in range(100):
@@ -2418,7 +2420,7 @@ def update_where(
         return _result(head)
 
     cond = F.expr(condition)
-    cand_df = spark.read.parquet(*(_data_path(table_dir, rel) for rel in candidates))
+    cand_df = _scan(spark, table_dir, manifest, candidates)
     unknown = sorted(set(assignments) - set(cand_df.columns))
     if unknown:
         raise ValueError(
@@ -2440,11 +2442,10 @@ def update_where(
     # rewrite ONLY the hit files; SET expressions see the OLD row (one
     # select evaluates every assignment against the input), non-matching
     # and NULL-condition rows pass through the otherwise() branch
-    # mergeSchema: same schema-evolution hazard as delete_where's
-    # survivor read — the hit set may span an additive boundary
-    hit_df = spark.read.option("mergeSchema", "true").parquet(
-        *(_data_path(table_dir, rel) for rel in hit_files)
-    )
+    # the manifest's union schema: same schema-evolution hazard as
+    # delete_where's survivor read — the hit set may span an additive
+    # boundary
+    hit_df = _scan(spark, table_dir, manifest, hit_files, merge_schema=True)
     projected = [
         (
             F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
@@ -2457,57 +2458,32 @@ def update_where(
     ]
     tag = uuid.uuid4().hex[:12]
     staging = f"{table_dir}/staging-{tag}"
-    hit_df.select(*projected).write.parquet(staging)
+    updated = hit_df.select(*projected)
+    updated.write.parquet(staging)
 
     constraints = manifest.get("constraints", {})
-    if constraints:
-        staged = spark.read.parquet(staging)
-        for cname, cexpr in sorted(constraints.items()):
-            bad = staged.filter(~F.coalesce(F.expr(cexpr), F.lit(True))).count()
-            if bad:
-                fs.delete(Path(staging), True)
-                raise ValueError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by "
-                    f"{bad} updated row(s) — UPDATE refused, nothing written"
-                )
+    _check_constraints(
+        spark, staging, updated.schema, constraints,
+        "updated row(s) — UPDATE refused", lambda: fs.delete(Path(staging), True),
+    )
 
-    stats_cols = sorted({c for s in stats.values() for c in s})
-    staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-    staged_blooms = _recompute_staged_blooms(spark, staging, _bloom_specs(manifest))
-
+    meta = _staged_meta(
+        spark, staging, updated.schema, _stats_cols(manifest), _bloom_specs(manifest)
+    )
+    staged_total = sum(meta[1].values())
     hit_rows_before = sum(
         int(manifest.get("rows", {}).get(rel, 0)) for rel in hit_files
     )
-    if manifest.get("rows") and sum(staged_rows.values()) != hit_rows_before:
+    if manifest.get("rows") and staged_total != hit_rows_before:
         fs.delete(Path(staging), True)
         raise RuntimeError(
-            f"UPDATE cardinality tripwire: rewrote {sum(staged_rows.values())} "
+            f"UPDATE cardinality tripwire: rewrote {staged_total} "
             f"rows from {hit_rows_before} — an assignment expression changed "
             "row counts, refusing to commit"
         )
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s0: s0.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/u{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"u{tag}", meta
+    )
 
     hit_set = set(hit_files)
     for _attempt in range(100):
@@ -2594,7 +2570,7 @@ def update_where(
 
 def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
     """The manifest's ACTIVE deletion-vector frame — the union of its
-    ``dv_files`` sidecars, columns ``(__file string, __pos long)`` —
+    ``dv_files`` sidecars, columns ``_DV_SCHEMA`` —
     or ``None`` when the version carries no deletion vectors. Sidecar
     rows for data files no longer live are harmless: file names are
     uuid-tagged and never reused, so a stale position can never match a
@@ -2602,7 +2578,9 @@ def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
     dv_files = manifest.get("dv_files", [])
     if not dv_files:
         return None
-    return spark.read.parquet(*(_data_path(table_dir, rel) for rel in dv_files))
+    return spark.read.schema(_DV_SCHEMA).parquet(
+        *(_data_path(table_dir, rel) for rel in dv_files)
+    )
 
 
 def _read_with_dvs(spark: SparkSession, table_dir: str, manifest: dict, rels):
@@ -2626,7 +2604,7 @@ def _read_with_dvs(spark: SparkSession, table_dir: str, manifest: dict, rels):
     parts = []
     if dv_rels:
         dv = _dv_frame(spark, table_dir, manifest)
-        base = spark.read.parquet(*(_data_path(table_dir, rel) for rel in dv_rels))
+        base = _scan(spark, table_dir, manifest, dv_rels)
         cols = base.columns
         parts.append(
             base.withColumn("__file", F.col("_metadata.file_name"))
@@ -2635,10 +2613,10 @@ def _read_with_dvs(spark: SparkSession, table_dir: str, manifest: dict, rels):
             .select(*cols)
         )
     if plain:
-        parts.append(spark.read.parquet(*(_data_path(table_dir, rel) for rel in plain)))
+        parts.append(_scan(spark, table_dir, manifest, plain))
     if not parts:
         src = rels[0] if rels else manifest["files"][0]
-        return spark.read.parquet(_data_path(table_dir, src)).limit(0)
+        return _scan(spark, table_dir, manifest, [src]).limit(0)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2672,22 +2650,20 @@ def _to_physical(manifest: dict, cols) -> list[str]:
 def _apply_mapping(df: DataFrame, manifest: dict) -> DataFrame:
     """Resolve PHYSICAL file columns to the manifest schema's LOGICAL
     names (Iceberg-style column mapping): select exactly the schema's
-    fields, aliasing each from its mapped physical name — which also
-    projects away dropped columns (their physical data stays in the
-    files for older versions' reads). Identity tables pass through
-    untouched."""
-    if _mapping(manifest) is None:
-        return df
+    fields, aliasing each from its mapped physical name. ``_scan`` read
+    the files with that schema, so every field is present (typed NULLs
+    where a file lacks it) and dropped columns are never read (their
+    physical data stays in the files for older versions' reads).
+    Identity tables pass through untouched."""
     m = _mapping(manifest)
-    cols = []
-    for f in manifest.get("schema", {}).get("fields", []):
-        lg = f["name"]
-        ph = m.get(lg, lg)
-        if ph in df.columns:
-            cols.append(F.col(ph).alias(lg))
-        else:  # absent in every sampled file: typed NULLs
-            cols.append(F.lit(None).cast(f["type"]).alias(lg))
-    return df.select(*cols)
+    if m is None:
+        return df
+    return df.select(
+        *[
+            F.col(m.get(f["name"], f["name"])).alias(f["name"])
+            for f in manifest["schema"]["fields"]
+        ]
+    )
 
 
 def _refuse_mapping(manifest: dict, op: str) -> None:
@@ -2817,7 +2793,7 @@ def _mor_delete(
     # probe: matching live positions (already-deleted rows excluded so a
     # re-run or overlapping condition never double-counts)
     live = (
-        spark.read.parquet(*(_data_path(table_dir, rel) for rel in candidates))
+        _scan(spark, table_dir, manifest, candidates)
         .withColumn("__file", F.col("_metadata.file_name"))
         .withColumn("__pos", F.col("_metadata.row_index"))
     )
@@ -2831,7 +2807,7 @@ def _mor_delete(
     matches.write.parquet(f"{table_dir}/{dv_rel}")
     per_file = {
         r["__file"]: int(r["n"])
-        for r in spark.read.parquet(f"{table_dir}/{dv_rel}")
+        for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
         .groupBy("__file")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -3011,7 +2987,7 @@ def update_where_mor(
 
     cond = F.expr(condition)
     base = (
-        spark.read.parquet(*(_data_path(table_dir, rel) for rel in candidates))
+        _scan(spark, table_dir, manifest, candidates)
         .withColumn("__file", F.col("_metadata.file_name"))
         .withColumn("__pos", F.col("_metadata.row_index"))
     )
@@ -3032,7 +3008,7 @@ def update_where_mor(
         matched.select("__file", "__pos").write.parquet(f"{table_dir}/{dv_rel}")
         per_file = {
             r["__file"]: int(r["n"])
-            for r in spark.read.parquet(f"{table_dir}/{dv_rel}")
+            for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
             .groupBy("__file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -3056,57 +3032,33 @@ def update_where_mor(
     finally:
         matched.unpersist()
 
+    def _unstage():
+        fs.delete(Path(staging), True)
+        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
+
     constraints = manifest.get("constraints", {})
-    staged = spark.read.parquet(staging)
-    if constraints:
-        for cname, cexpr in sorted(constraints.items()):
-            bad = staged.filter(~F.coalesce(F.expr(cexpr), F.lit(True))).count()
-            if bad:
-                fs.delete(Path(staging), True)
-                fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-                raise ValueError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by "
-                    f"{bad} updated row(s) — UPDATE refused, nothing written"
-                )
+    _check_constraints(
+        spark, staging, updated.schema, constraints,
+        "updated row(s) — UPDATE refused", _unstage,
+    )
 
-    stats_cols = sorted({c for s in stats.values() for c in s})
-    staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-    staged_blooms = _recompute_staged_blooms(spark, staging, _bloom_specs(manifest))
-
+    meta = _staged_meta(
+        spark, staging, updated.schema, _stats_cols(manifest), _bloom_specs(manifest)
+    )
     by_name = {rel.rsplit("/", 1)[-1]: rel for rel in candidates}
     new_counts = {by_name[name]: n for name, n in per_file.items()}
     rows_updated = sum(new_counts.values())
-    if sum(staged_rows.values()) != rows_updated:
-        fs.delete(Path(staging), True)
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
+    staged_total = sum(meta[1].values())
+    if staged_total != rows_updated:
+        _unstage()
         raise RuntimeError(
             f"UPDATE cardinality tripwire: reinserted "
-            f"{sum(staged_rows.values())} rows for {rows_updated} vectored — "
+            f"{staged_total} rows for {rows_updated} vectored — "
             "an assignment expression changed row counts, refusing to commit"
         )
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s0: s0.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/w{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"w{tag}", meta
+    )
 
     def _undo():
         for rel in new_files:
@@ -3283,7 +3235,7 @@ def merge_into_mor(
         )
 
     live = (
-        spark.read.parquet(*(_data_path(table_dir, rel) for rel in all_files))
+        _scan(spark, table_dir, manifest, all_files)
         .withColumn("__file", F.col("_metadata.file_name"))
         .withColumn("__pos", F.col("_metadata.row_index"))
     )
@@ -3305,7 +3257,7 @@ def merge_into_mor(
         ).write.parquet(f"{table_dir}/{dv_rel}")
         per_file = {
             r["__file"]: int(r["n"])
-            for r in spark.read.parquet(f"{table_dir}/{dv_rel}")
+            for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
             .groupBy("__file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -3328,7 +3280,8 @@ def merge_into_mor(
             .join(live.select(*keys), on=keys, how="left_anti")
             .select(*out_cols)
         )
-        updated.unionByName(inserts).write.parquet(staging)
+        staged_df = updated.unionByName(inserts)
+        staged_df.write.parquet(staging)
     finally:
         joined.unpersist()
 
@@ -3337,21 +3290,15 @@ def merge_into_mor(
         fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
 
     constraints = manifest.get("constraints", {})
-    staged = spark.read.parquet(staging)
-    if constraints:
-        for cname, cexpr in sorted(constraints.items()):
-            bad = staged.filter(~F.coalesce(F.expr(cexpr), F.lit(True))).count()
-            if bad:
-                _undo()
-                raise ValueError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by "
-                    f"{bad} merged row(s) — MERGE refused, nothing written"
-                )
+    _check_constraints(
+        spark, staging, staged_df.schema, constraints,
+        "merged row(s) — MERGE refused", _undo,
+    )
 
-    stats_cols = sorted({c for st in manifest.get("stats", {}).values() for c in st})
-    staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-    staged_blooms = _recompute_staged_blooms(spark, staging, _bloom_specs(manifest))
-    rows_inserted = sum(staged_rows.values()) - rows_updated
+    meta = _staged_meta(
+        spark, staging, staged_df.schema, _stats_cols(manifest), _bloom_specs(manifest)
+    )
+    rows_inserted = sum(meta[1].values()) - rows_updated
 
     by_name = {rel.rsplit("/", 1)[-1]: rel for rel in all_files}
     new_counts = {by_name[name]: n for name, n in per_file.items()}
@@ -3367,28 +3314,9 @@ def merge_into_mor(
             "files_rewritten": 0,
         }
 
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s0: s0.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/g{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"g{tag}", meta
+    )
     if not new_counts:
         fs.delete(Path(f"{table_dir}/{dv_rel}"), True)  # pure-insert merge
 
@@ -3517,34 +3445,14 @@ def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
 
     tag = uuid.uuid4().hex[:12]
     staging = f"{table_dir}/staging-{tag}"
-    _read_with_dvs(spark, table_dir, manifest, hit_files).write.parquet(staging)
-
-    stats_cols = sorted({c for s in manifest.get("stats", {}).values() for c in s})
-    staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-    staged_blooms = _recompute_staged_blooms(spark, staging, _bloom_specs(manifest))
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s0: s0.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/p{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    live = _read_with_dvs(spark, table_dir, manifest, hit_files)
+    live.write.parquet(staging)
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"p{tag}",
+        _staged_meta(
+            spark, staging, live.schema, _stats_cols(manifest), _bloom_specs(manifest)
+        ),
+    )
 
     hit_set = set(hit_files)
     for _attempt in range(100):
@@ -3742,8 +3650,7 @@ def merge_into(
             f"{tuple(dup[0][k] for k in keys)} — ambiguous MERGE refused"
         )
 
-    tgt_paths = [_data_path(table_dir, rel) for rel in all_files]
-    tgt_keys = spark.read.parquet(*tgt_paths).select(
+    tgt_keys = _scan(spark, table_dir, manifest, all_files).select(
         F.input_file_name().alias("__file"), *keys
     )
     skeys = src.select(*keys, "__del").distinct()
@@ -3784,9 +3691,7 @@ def merge_into(
     # in a matched source column still wins — MERGE's UPDATE SET t.c=s.c);
     # matched rows whose source row is delete-flagged are dropped
     if hit_files:
-        t = spark.read.parquet(
-            *(_data_path(table_dir, rel) for rel in hit_files)
-        ).alias("t")
+        t = _scan(spark, table_dir, manifest, hit_files).alias("t")
         s = src.withColumn("__src", F.lit(1)).alias("s")
         src_exists = F.col("s.__src").isNotNull()
         rewritten = (
@@ -3819,43 +3724,17 @@ def merge_into(
     # violate just as an insert can); refusal removes the staging dir
     # atomically, nothing committed
     constraints = manifest.get("constraints", {})
-    if constraints:
-        staged = spark.read.parquet(staging)
-        for cname, cexpr in sorted(constraints.items()):
-            bad = staged.filter(~F.coalesce(F.expr(cexpr), F.lit(True))).count()
-            if bad:
-                fs.delete(Path(staging), True)
-                raise ValueError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by "
-                    f"{bad} merged row(s) — MERGE refused, nothing written"
-                )
-
-    stats_cols = sorted({c for st in manifest.get("stats", {}).values() for c in st})
-    staged_stats, staged_rows = _collect_staged_stats(spark, staging, stats_cols)
-    staged_blooms = _recompute_staged_blooms(spark, staging, _bloom_specs(manifest))
-
-    data_dir = Path(f"{table_dir}/{_DATA}")
-    fs.mkdirs(data_dir)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_rows: dict[str, int] = {}
-    for i, st in enumerate(
-        sorted(fs.listStatus(Path(staging)), key=lambda s0: s0.getPath().getName())
-    ):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = f"{_DATA}/m{tag}-{i}-{name}"
-        if not fs.rename(st.getPath(), Path(f"{table_dir}/{rel}")):
-            raise IOError(f"rename failed for {name} -> {rel}")
-        new_files.append(rel)
-        if name in staged_stats:
-            new_stats[rel] = staged_stats[name]
-        if name in staged_blooms:
-            new_blooms[rel] = staged_blooms[name]
-        new_rows[rel] = staged_rows.get(name, 0)
-    fs.delete(Path(staging), True)
+    _check_constraints(
+        spark, staging, staged_df.schema, constraints,
+        "merged row(s) — MERGE refused", lambda: fs.delete(Path(staging), True),
+    )
+    new_files, new_stats, new_blooms, new_rows = _move_staged(
+        fs, jvm, table_dir, staging, f"m{tag}",
+        _staged_meta(
+            spark, staging, staged_df.schema, _stats_cols(manifest),
+            _bloom_specs(manifest),
+        ),
+    )
 
     hit_set = set(hit_files)
     hit_rows_before = sum(manifest.get("rows", {}).get(rel, 0) for rel in hit_files)
@@ -4607,7 +4486,7 @@ def describe_detail(spark: SparkSession, table_dir: str) -> dict:
         fs.getFileStatus(Path(_data_path(table_dir, rel))).getLen()
         for rel in files
     ]
-    stats_cols = sorted({c for s in man.get("stats", {}).values() for c in s})
+    stats_cols = _stats_cols(man)
     bloom_cols = sorted({c for e in man.get("blooms", {}).values() for c in e})
     return {
         "version": head,
@@ -4830,7 +4709,7 @@ def read_changes_cdf(
             pos_par = _dv_frame(spark, table_dir, par_m)
             names = {rel.rsplit("/", 1)[-1] for rel in dv_diff}
             data = (
-                spark.read.parquet(*(_data_path(table_dir, rel) for rel in dv_diff))
+                _scan(spark, table_dir, man, dv_diff)
                 .withColumn("__file", F.col("_metadata.file_name"))
                 .withColumn("__pos", F.col("_metadata.row_index"))
             )

@@ -156,6 +156,7 @@ def test_drop_refusals(spark, tdir):
 
 def test_chained_renames_resolve(spark, tdir):
     sn.write_snapshot(_kv(spark, 0, 4), tdir)
+    v1_rows = sorted(sn.read_snapshot(spark, tdir).collect())
     sn.rename_column(spark, tdir, "v", "b")
     sn.rename_column(spark, tdir, "b", "c")
     man = sn.snapshot_info(spark, tdir, 3)
@@ -163,6 +164,15 @@ def test_chained_renames_resolve(spark, tdir):
     got = sn.read_snapshot(spark, tdir)
     assert got.columns == ["i", "c"]
     assert {r.c for r in got.collect()} == {f"a-{i}" for i in range(4)}
+    # rename + drop: the head reads the renamed survivor, and time travel
+    # to the pre-rename version returns the same rows as before
+    sn.drop_column(spark, tdir, "i")
+    head = sn.read_snapshot(spark, tdir)
+    assert head.columns == ["c"]
+    assert sorted(r.c for r in head.collect()) == sorted(r.v for r in v1_rows)
+    old = sn.read_snapshot(spark, tdir, version=1)
+    assert old.columns == ["i", "v"]
+    assert sorted(old.collect()) == v1_rows
 
 
 def test_rename_on_mor_table_reads_through_dvs(spark, tdir):

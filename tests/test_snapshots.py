@@ -4,6 +4,9 @@ optimistic-commit retry when a competing manifest lands first."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -237,10 +240,26 @@ def test_schema_evolution_merge_schema_read(spark, tdir):
     widened = _batch(spark, 3, 5).withColumn("tag", F.lit("b"))
     # schema-on-write: additive drift needs the explicit opt-in now
     sn.write_snapshot(widened, tdir, allow_schema_evolution=True)
+    # the manifest records the union schema, so the plain read returns it
+    # too, with typed NULLs for the older files
+    for merge in (True, False):
+        df = sn.read_snapshot(spark, tdir, merge_schema=merge)
+        assert sorted(df.columns) == ["i", "tag"]
+        assert dict(df.dtypes)["tag"] == "string"
+        got = {(r.i, r.tag) for r in df.collect()}
+        assert got == {(0, None), (1, None), (2, None), (3, "b"), (4, "b")}
+    # a manifest written before schema tracking records none: the read
+    # falls back to inference, and merge_schema unions the file schemas
+    log = os.path.join(tdir, "_log")
+    man = sn.snapshot_info(spark, tdir, 2)
+    del man["schema"]
+    with open(os.path.join(log, "v00000002.json"), "w") as f:
+        json.dump(man, f)
+    crc = os.path.join(log, ".v00000002.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)  # the rewritten manifest no longer matches it
     df = sn.read_snapshot(spark, tdir, merge_schema=True)
-    assert sorted(df.columns) == ["i", "tag"]
-    got = {(r.i, r.tag) for r in df.collect()}
-    assert got == {(0, None), (1, None), (2, None), (3, "b"), (4, "b")}
+    assert {(r.i, r.tag) for r in df.collect()} == got
 
 
 def test_read_changes_incremental_consumption(spark, tdir):
@@ -2058,3 +2077,98 @@ def test_describe_detail_reports_maintenance_signals(spark, tdir):
     sn.materialize_dvs(spark, tdir)
     d2 = sn.describe_detail(spark, tdir)
     assert d2["n_dv_files"] == 0 and d2["dv_rows"] == 0 and d2["n_rows"] == 95
+
+
+def _gate_table(spark):
+    return spark.range(0, 40, 1, 2).select(
+        F.col("id").alias("i"),
+        (F.col("id") % 7).alias("k"),
+        F.concat(F.lit("v-"), F.col("id")).alias("v"),
+    )
+
+
+def _gate_write(spark, tdir):
+    sn.write_snapshot(_gate_table(spark), tdir, stats_cols=("i",), bloom_cols=("k",))
+
+
+# Spark jobs each op may launch on the small stats+bloom table, setup
+# excluded. Every snapshot read passes its schema, so no op pays a
+# footer-sampling inference job; a new job in these paths fails here
+# instead of hiding in benchmark noise.
+_GATE_OPS = {
+    "write_snapshot": (lambda spark, tdir: None, _gate_write, 3),
+    "merge_into": (
+        _gate_write,
+        lambda spark, tdir: sn.merge_into(
+            spark, tdir, _gate_table(spark).filter("i % 10 = 0"), ["i"]
+        ),
+        10,
+    ),
+    "update_where": (
+        _gate_write,
+        lambda spark, tdir: sn.update_where(spark, tdir, {"v": "'x'"}, "i < 5"),
+        5,
+    ),
+    "update_where_mor": (
+        _gate_write,
+        lambda spark, tdir: sn.update_where_mor(spark, tdir, {"v": "'x'"}, "i < 5"),
+        6,
+    ),
+    "delete_where_mor": (
+        _gate_write,
+        lambda spark, tdir: sn.delete_where_mor(spark, tdir, "i < 5"),
+        3,
+    ),
+    "materialize_dvs": (
+        lambda spark, tdir: (
+            _gate_write(spark, tdir), sn.delete_where_mor(spark, tdir, "i < 5")
+        ),
+        lambda spark, tdir: sn.materialize_dvs(spark, tdir),
+        4,
+    ),
+    "read_snapshot_point": (
+        _gate_write,
+        lambda spark, tdir: sn.read_snapshot(spark, tdir, point={"k": 3}).collect(),
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_GATE_OPS))
+def test_dml_job_count_gate(spark, tdir, op):
+    setup, run, ceiling = _GATE_OPS[op]
+    setup(spark, tdir)
+    sc = spark.sparkContext
+    group = f"gate-{op}-{id(tdir)}"
+    sc.setJobGroup(group, op)
+    try:
+        run(spark, tdir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # status stores are fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    # a parquet write's stage carries the same "parquet at …" call site
+    # as schema inference; inference is the one that runs outside any
+    # SQL execution
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 100), 100)
+    sql_jobs = set()
+    for i in range(execs.size()):
+        it = execs.apply(i).jobs().keys().iterator()
+        while it.hasNext():
+            sql_jobs.add(int(it.next()))
+    def stage_names(j):
+        infos = (st.getStageInfo(s) for s in st.getJobInfo(j).stageIds)
+        return [i.name for i in infos if i is not None]
+
+    inference = [
+        j
+        for j in jobs
+        if j not in sql_jobs
+        and any(n.startswith("parquet at ") for n in stage_names(j))
+    ]
+    assert not inference, f"{op} sampled parquet footers in jobs {inference}"
+    assert len(jobs) <= ceiling, (op, len(jobs))

@@ -12,7 +12,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in: run from a second checkout, the gate
+# checks that checkout's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
