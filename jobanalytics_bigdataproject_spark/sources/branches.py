@@ -16,8 +16,9 @@ optimize, constraints, CDF…) works on the branch handle UNCHANGED,
 because the branch IS a table; isolation is free because branch commits
 land in the branch's own ``_log`` and its new data files in the
 branch's own ``data/``. This is the design the module's one-small-JSON
-manifest model wants: no new commit paths, no new manifest keys to
-carry (the r5/r6 bug class), and the refusal matrix is inherited from
+manifest model wants: no new commit paths, no new manifest keys (what a
+commit carries is the carry rule in the ``snapshots`` module
+docstring), and the refusal matrix is inherited from
 ``shallow_clone``'s tested semantics.
 
 **Publish = fast-forward.** ``fast_forward`` adopts the branch head's
@@ -54,7 +55,8 @@ from jobanalytics_bigdataproject_spark.sources.snapshots import (
     _DATA,
     _DV,
     _LOG,
-    _commit_metadata,
+    _TABLE_STATE,
+    _commit,
     _create_manifest,
     _data_path,
     _fs,
@@ -67,27 +69,6 @@ from jobanalytics_bigdataproject_spark.sources.snapshots import (
 
 _BRANCHES = "_branches"
 _TAGS = "tags"  # subdir of _log (ignored by current_version's v*.json filter)
-
-# per-commit manifest keys NEVER carried from the branch head into the
-# fast-forward commit (everything else — stats/rows/blooms/schema/
-# constraints/partition_spec/spec_history/bucket_by/column_mapping/
-# dropped_physical/dvs/dv_files — is table STATE and must move; see the
-# r6 lesson on carry-everything exclusion lists naming per-commit keys)
-_NO_CARRY = {
-    # structural (rebuilt by the fast-forward commit itself)
-    "version", "parent", "action", "added", "files", "source",
-    # per-commit metadata of the BRANCH HEAD's own last commit — mirrors
-    # _mor_delete's exclusion list in snapshots.py (the r6 lesson:
-    # carried idempotency_key / per-commit accounting keys corrupt
-    # replay probes and history rows). dvs/dv_files are NOT here: for a
-    # fast-forward they are table state and must move (DV-carry
-    # invariant).
-    "removed", "condition", "dv_added", "rows_deleted", "rows_updated",
-    "rows_inserted", "rows_removed", "restored", "set",
-    "idempotency_key", "files_rewritten", "renamed", "dropped",
-    "spec_from", "spec_to",
-}
-
 
 def _check_name(name: str) -> str:
     if not name or not all(c.isalnum() or c in "-_." for c in name):
@@ -263,17 +244,13 @@ def fast_forward(
         )
     }
 
-    def _rekey(d: dict | None) -> dict | None:
-        return {remap.get(k, k): v for k, v in d.items()} if d else d
-
-    manifest_state = {
-        k: v for k, v in bman.items() if k not in _NO_CARRY and v is not None
-    }
+    # main adopts the branch head's whole table state — and none of the
+    # per-commit keys of the branch's last commit (carry rule, snapshots
+    # module docstring)
+    adopted = {k: bman.get(k) for k in _TABLE_STATE}
     for key in ("stats", "rows", "blooms", "dvs"):
-        if key in manifest_state:
-            manifest_state[key] = _rekey(manifest_state[key])
-    if dv_files:
-        manifest_state["dv_files"] = dv_files
+        adopted[key] = {remap.get(k, k): v for k, v in bman.get(key, {}).items()}
+    adopted.update(files=files, dv_files=dv_files)
 
     done: list[tuple[str, str]] = []
     for src, dst in renames:
@@ -285,25 +262,19 @@ def fast_forward(
             raise IOError(f"could not adopt {src} into main — publish aborted")
         done.append((src, dst))
 
-    def build(parent: dict, version: int) -> dict:
-        if int(parent.get("version", 0)) != base:
+    def build(parent: dict, head: int) -> dict:
+        if head != base:
             raise ValueError(
-                f"main advanced to v{parent.get('version')} past branch base "
+                f"main advanced to v{head} past branch base "
                 f"v{base} — not a fast-forward; re-branch and replay"
             )
-        m = {
-            "version": version,
-            "parent": base,
-            "action": "fast_forward",
-            "source": {"branch": name, "branch_head": bhead, "base": base},
-            "files": files,
-            "added": [],
-        }
-        m.update(manifest_state)
-        return m
+        return adopted
 
     try:
-        new_version = _commit_metadata(fs, jvm, table_dir, build)
+        new_version = _commit(
+            fs, jvm, table_dir, build, action="fast_forward",
+            source={"branch": name, "branch_head": bhead, "base": base},
+        )[0]
     except BaseException:
         for src, dst in reversed(done):
             fs.rename(Path(dst), Path(src))
@@ -425,13 +396,9 @@ def rebase_branch(spark: SparkSession, table_dir: str, name: str) -> int:
             "re-branch from the new head and redo the conflicting DML"
         )
 
-    # structural state: at most one side may have changed each key
-    structural = (
-        "schema", "constraints", "partition_spec", "spec_history",
-        "bucket_by", "column_mapping", "dropped_physical",
-    )
+    # table state: at most one side may have changed each key
     merged_struct = {}
-    for key in structural:
+    for key in _TABLE_STATE:
         b_val, m_val, base_val = bh_m.get(key), main_m.get(key), base_m.get(key)
         if b_val != base_val and m_val != base_val and b_val != m_val:
             raise ValueError(
@@ -492,7 +459,7 @@ def rebase_branch(spark: SparkSession, table_dir: str, name: str) -> int:
             v1[key] = {to_branch(f): v for f, v in main_m[key].items()}
     if main_m.get("dv_files"):
         v1["dv_files"] = [to_branch(f) for f in main_m["dv_files"]]
-    for key in structural:
+    for key in _TABLE_STATE:
         if main_m.get(key) is not None:
             v1[key] = main_m[key]
     v2 = {

@@ -37,6 +37,29 @@ Commit protocol (optimistic concurrency, the Delta approach):
    operation with a conditional PUT or a DynamoDB-style lock — the
    standard object-store caveat, isolated to this single call.
 
+Every version-creating function commits through ``_commit``, the one
+retry loop. Before each attempt it refuses (removing the commit's staged
+files and deletion-vector sidecar) if a file the commit removes or
+vectors is no longer live, or no longer carries the deletion-vector
+count it had when the op probed it.
+
+Carry rule — what a new version takes from its parent: the file list,
+``stats``, ``rows`` and ``blooms`` are the parent's minus the files the
+commit removes, plus its new files; ``dvs`` and ``dv_files`` carry (minus
+removed files), plus the commit's new sidecar; the table-state keys of
+``_TABLE_STATE`` (schema, constraints, partition spec and its history,
+bucket layout, column mapping, dropped physical names) carry verbatim.
+Every other key is per-commit (accounting, condition, idempotency key,
+``dv_added``…) and is written only by the commit that owns it. An op's
+deliberate exceptions are explicit overrides at its call site: overwrite
+resets the lineage, rollback takes its state from the target version,
+and commits that write or drop data files outside the bucketed writer
+(copy-on-write DML, merge-on-read reinserts, optimize, materialize) or
+rename/drop columns drop ``bucket_by``: one file without bucket naming
+breaks the all-files-bucketed property ``read_snapshot_bucketed`` relies
+on, so it refuses until an overwrite re-buckets. Merge-on-read deletes
+and constraint/spec commits touch no file and keep it.
+
 Local-filesystem caveat (found by the concurrent-writer stress test,
 tests/test_snapshots.py): Hadoop's ChecksumFileSystem implements
 ``create(path, overwrite=False)`` as check-then-create — NOT atomic —
@@ -83,6 +106,7 @@ import re as _re_mod
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +119,24 @@ _BUCKETVIEW = "_bucketview"  # per-version hardlink views for bucketed reads
 _BLOOM_WIDTH = 2048  # bits per probe stripe
 _BLOOM_DEPTH = 4  # probes per key
 _DV_SCHEMA = "__file STRING, __pos LONG"  # deletion-vector sidecar rows
+# table-level manifest keys every commit carries (module docstring)
+_TABLE_STATE = (
+    "schema", "constraints", "partition_spec", "spec_history",
+    "bucket_by", "column_mapping", "dropped_physical",
+)
+
+
+class _Staged(NamedTuple):
+    """A commit's new data files (relative paths) and their manifest
+    entries, as ``_move_staged`` leaves them under ``data/``."""
+
+    files: list
+    stats: dict
+    blooms: dict
+    rows: dict
+
+
+_NO_FILES = _Staged([], {}, {}, {})
 
 
 def _plain(v):
@@ -391,6 +433,11 @@ def current_version(spark: SparkSession, table_dir: str) -> int:
     One directory listing of ``_log/`` — O(versions) names, no file reads."""
     fs, _, jvm = _fs(spark, table_dir)
     _refuse_if_retired(fs, jvm, table_dir)
+    return current_version_from_fs(fs, jvm, table_dir)
+
+
+def current_version_from_fs(fs, jvm, table_dir: str) -> int:
+    """`current_version` without re-resolving the FileSystem (loop helper)."""
     log_path = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{_LOG}")
     if not fs.exists(log_path):
         return 0
@@ -427,6 +474,148 @@ def _find_idempotent(fs, jvm, table_dir: str, key: str, head: int) -> int | None
 def _schema_fields(schema_json: dict) -> dict:
     """name → type-json map for order-insensitive schema comparison."""
     return {f["name"]: f["type"] for f in schema_json.get("fields", [])}
+
+
+# carried keys a manifest omits when empty ({} is a meaningful mapping)
+_OMIT_EMPTY = {"stats", "blooms", "rows", "dvs", "dv_files", *_TABLE_STATE} - {
+    "column_mapping"
+}
+
+
+def _commit(
+    fs,
+    jvm,
+    table_dir: str,
+    build=None,
+    *,
+    probe: tuple[int, dict] | None = None,
+    new: _Staged = _NO_FILES,
+    removed=None,
+    vectored: dict | None = None,
+    sidecar: str | None = None,
+    conflict: str = "",
+    validated: dict | None = None,
+    redo: str = "commit",
+    key: str | None = None,
+    **fields,
+) -> tuple[int, bool]:
+    """The optimistic commit loop every new version goes through (module
+    docstring: commit protocol and carry rule). Each attempt re-reads the
+    head — reusing ``probe``'s ``(version, manifest)`` while the head has
+    not moved — and builds the next manifest from it:
+
+    - ``new`` files join the file list with their stats/blooms/rows;
+      ``removed`` files leave it (recorded as ``removed`` unless None);
+      ``vectored`` (``{file: rows deleted}``) adds to those files'
+      deletion-vector counts, whose positions the ``sidecar`` dir holds;
+    - ``fields`` are the commit's own keys (``action``, accounting);
+    - ``build(parent, head)`` returns overrides (None drops a key) and
+      may raise to refuse.
+
+    Refusals (``RuntimeError``): a removed or vectored file gone from the
+    head, or whose deletion-vector count moved since ``probe`` (message:
+    the ``conflict`` template, formatted with ``table_dir``, ``cur`` and
+    ``rel``); a constraint set no longer equal to ``validated``. Those
+    and anything ``build`` raises first delete the staged files and the
+    sidecar. An idempotency ``key`` committed since the probe runs the
+    same clean-up and replays the prior version. Without a ``probe`` the
+    table must already exist (``FileNotFoundError``).
+
+    Returns ``(version, True)`` for a new commit, ``(prior, False)`` for
+    a replay."""
+    Path = jvm.org.apache.hadoop.fs.Path
+    head0, probed = probe or (None, {})
+    gone = set(removed or ())
+    vectored = vectored or {}
+
+    def unstage():
+        for rel in new.files:
+            fs.delete(Path(f"{table_dir}/{rel}"), False)
+        if sidecar:
+            fs.delete(Path(f"{table_dir}/{sidecar}"), True)
+
+    # bounded: losing the create race 100 times in a row means the
+    # "conflict" is really a persistent error — permissions, bad path —
+    # and must surface, not spin
+    for _attempt in range(100):
+        _refuse_if_retired(fs, jvm, table_dir)
+        cur = current_version_from_fs(fs, jvm, table_dir)
+        if cur == 0 and probe is None:
+            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+        if key is not None and cur != head0:
+            prior = _find_idempotent(fs, jvm, table_dir, key, cur)
+            if prior is not None:
+                unstage()
+                return prior, False
+        if cur == head0:
+            parent = probed
+        else:
+            parent = _read_manifest(fs, jvm, table_dir, cur) if cur else {}
+        dvs = parent.get("dvs", {})
+        try:
+            live = set(parent.get("files", ()))
+            for rel in [*gone, *vectored]:
+                if rel not in live or dvs.get(rel) != probed.get("dvs", {}).get(rel):
+                    raise RuntimeError(
+                        conflict.format(table_dir=table_dir, cur=cur, rel=rel)
+                    )
+            if validated is not None and parent.get("constraints", {}) != validated:
+                raise RuntimeError(
+                    f"constraint set changed concurrently on {table_dir} "
+                    f"(validated against v{head0}, head is v{cur}); re-run the {redo}"
+                )
+            overrides = build(parent, cur) if build else {}
+        except BaseException:
+            unstage()
+            raise
+        dvs = {f: n for f, n in dvs.items() if f not in gone}
+        dvs.update({f: int(dvs.get(f, 0)) + n for f, n in vectored.items()})
+        manifest = {
+            "version": cur + 1,
+            "parent": cur,
+            **fields,
+            "files": [f for f in parent.get("files", []) if f not in gone]
+            + new.files,
+            "added": new.files,
+        }
+        if removed is not None:
+            manifest["removed"] = sorted(gone)
+        for k in ("stats", "blooms", "rows"):
+            manifest[k] = {
+                **{f: e for f, e in parent.get(k, {}).items() if f not in gone},
+                **getattr(new, k),
+            }
+        manifest["dvs"] = dvs
+        if dvs:
+            manifest["dv_files"] = parent.get("dv_files", []) + (
+                [sidecar] if sidecar else []
+            )
+        if sidecar:
+            manifest["dv_added"] = [sidecar]
+        manifest.update({k: parent.get(k) for k in _TABLE_STATE})
+        manifest.update(overrides)
+        if key is not None:
+            manifest["idempotency_key"] = key
+        manifest = {
+            k: v
+            for k, v in manifest.items()
+            if v is not None and (v or k not in _OMIT_EMPTY)
+        }
+        mp = _manifest_path(jvm, table_dir, cur + 1)
+        fs.mkdirs(mp.getParent())
+        if _create_manifest(fs, mp, manifest):
+            return cur + 1, True
+    raise IOError(
+        f"could not commit {fields.get('action')} to {table_dir} after 100 "
+        "attempts — manifest create keeps failing (permissions/path problem, "
+        "not contention)"
+    )
+
+
+def _unbucketed(parent: dict, head: int) -> dict:
+    """``_commit`` override of commits that write or drop data files
+    outside the bucketed writer: the bucket layout no longer holds."""
+    return {"bucket_by": None}
 
 
 def write_snapshot(
@@ -517,14 +706,11 @@ def write_snapshot(
     fs, _, jvm = _fs(spark, table_dir)
     Path = jvm.org.apache.hadoop.fs.Path
 
+    head0 = current_version(spark, table_dir)
     if idempotency_key is not None:
-        prior = _find_idempotent(
-            fs, jvm, table_dir, idempotency_key, current_version(spark, table_dir)
-        )
+        prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, head0)
         if prior is not None:
             return prior
-
-    head0 = current_version(spark, table_dir)
     head0_manifest = (
         _read_manifest(fs, jvm, table_dir, head0) if head0 > 0 else {}
     )
@@ -673,7 +859,7 @@ def write_snapshot(
         mapping=parent_mapping if mode == "append" else None,
     )
 
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
+    staged = _move_staged(
         fs, jvm, table_dir, staging, f"c{tag}",
         _staged_meta(
             spark, staging, stage_frame.schema, list(stats_cols),
@@ -681,20 +867,10 @@ def write_snapshot(
         ),
     )
 
-    # 2. optimistic manifest commit (bounded: losing the create race 100
-    # times in a row means the "conflict" is really a persistent error —
-    # permissions, bad path — and must surface, not spin)
-    for _attempt in range(100):
-        head = current_version(spark, table_dir)
-        if idempotency_key is not None:
-            # a racing redelivery may have committed our key after the
-            # pre-staging check; our staged files become vacuum debris
-            prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, head)
-            if prior is not None:
-                for rel in new_files:
-                    fs.delete(Path(f"{table_dir}/{rel}"), False)
-                return prior
-        parent = _read_manifest(fs, jvm, table_dir, head) if head > 0 else {}
+    # 2. optimistic manifest commit; a lost race re-reads the head and
+    # retries at head+1 without rewriting any data
+    def build(parent: dict, head: int) -> dict:
+        schema = committed_schema
         loop_schema = parent.get("schema") if mode == "append" else None
         # a concurrent commit may have EVOLVED the schema after our
         # validation — refuse like a constraint change (our staged files
@@ -704,8 +880,6 @@ def write_snapshot(
             then = _schema_fields(parent_schema) if parent_schema else None
             staged_fields = _schema_fields(staged_schema)
             if now != then and now != staged_fields:
-                for rel in new_files:
-                    fs.delete(Path(f"{table_dir}/{rel}"), False)
                 raise RuntimeError(
                     f"table schema changed concurrently on {table_dir} "
                     f"(validated against v{head0}, head is v{head}); re-run"
@@ -715,7 +889,7 @@ def write_snapshot(
                 # writers bootstrapping an empty table with the same
                 # schema): our files are valid against it — adopt the
                 # head's recorded schema instead of refusing
-                committed_schema = loop_schema
+                schema = loop_schema
         if _rewrite_of is not None and head != _rewrite_of:
             # this overwrite rewrites version N's rows; if any commit since
             # changed the file set or the deletion vectors, overwriting
@@ -725,115 +899,42 @@ def write_snapshot(
             if parent.get("files") != base.get("files") or parent.get(
                 "dvs", {}
             ) != base.get("dvs", {}):
-                for rel in new_files:
-                    fs.delete(Path(f"{table_dir}/{rel}"), False)
                 raise RuntimeError(
                     f"concurrent commit changed {table_dir} since this "
                     f"rewrite read v{_rewrite_of} (head is v{head}); rerun "
                     "the optimize against the new head"
                 )
-        constraints = parent.get("constraints", {})
-        if constraints != validated:
-            # a concurrent set/drop-constraint landed after our validation:
-            # refusing is the only serializable answer (our staged rows
-            # were never checked against the new set)
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"constraint set changed concurrently on {table_dir} "
-                f"(validated against v{head0}, head is v{head}); re-run the commit"
-            )
-        if mode == "append" and head > 0:
-            parent_files = parent["files"]
-            parent_stats = parent.get("stats", {})
-            parent_blooms = parent.get("blooms", {})
-            parent_rows = parent.get("rows", {})
-        else:
-            parent_files = []
-            parent_stats = {}
-            parent_blooms = {}
-            parent_rows = {}
-        version = head + 1
-        stats = {**parent_stats, **new_stats} if mode == "append" else new_stats
-        blooms = {**parent_blooms, **new_blooms} if mode == "append" else new_blooms
-        rows = {**parent_rows, **new_rows} if mode == "append" else new_rows
-        manifest = {
-            "version": version,
-            "parent": head,
-            "action": mode,
-            "files": parent_files + new_files if mode == "append" else new_files,
-            "added": new_files,
-        }
-        if stats:
-            manifest["stats"] = stats
-        if blooms:
-            manifest["blooms"] = blooms
-        if rows:
-            manifest["rows"] = rows
-        # partition spec: appends carry the head's (fresh in the loop —
-        # a concurrent overwrite may have re-declared it); overwrite and
-        # first-write record the caller's
-        loop_spec = (
-            parent.get("partition_spec")
-            if mode == "append" and head > 0
-            else (spec or None)
-        )
-        if loop_spec:
-            manifest["partition_spec"] = list(loop_spec)
-        # spec lineage rides along on appends (historical specs keep
-        # pruning the files they wrote); overwrite resets it — every
-        # file is now laid out under the caller's spec
-        if mode == "append" and head > 0 and parent.get("spec_history"):
-            manifest["spec_history"] = parent["spec_history"]
-        # bucket layout: an append's files were STAGED under `bb` (the
-        # head0 layout, or the caller's on a first write) — if the head's
-        # layout differs now, a concurrent commit changed it (re-bucket,
-        # DML drop, or a racing bootstrap of an empty table) and our
-        # staged files would silently mix layouts: refuse, both
-        # directions. Deliberately NOT carried by DML/optimize/
-        # rename-drop paths: one rewritten file without bucket naming
-        # breaks the all-files-bucketed property, so those commits drop
-        # the key and read_snapshot_bucketed refuses until an overwrite
-        # re-buckets (constraint/evolve metadata commits DO carry it —
-        # they touch no file).
-        if mode == "append" and head > 0 and parent.get("bucket_by") != bb:
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
+        if mode == "overwrite":
+            # the new files are the whole table: schema, partition spec
+            # and bucket layout are the caller's, the lineage (spec
+            # history, column mapping, deletion vectors) resets
+            return {
+                "files": staged.files, "stats": staged.stats,
+                "blooms": staged.blooms, "rows": staged.rows,
+                "dvs": None, "dv_files": None, "schema": schema,
+                "partition_spec": spec or None, "spec_history": None,
+                "bucket_by": bb, "column_mapping": None,
+                "dropped_physical": None,
+            }
+        # an append's files were STAGED under `bb` (the head0 layout, or
+        # the caller's on a first write): a differing head layout means a
+        # concurrent commit changed it and our files would silently mix
+        # layouts — refuse, both directions (bucket_by: module docstring)
+        if head > 0 and parent.get("bucket_by") != bb:
             raise RuntimeError(
                 f"bucket layout changed concurrently on {table_dir} "
                 f"(staged under {bb}, head has "
                 f"{parent.get('bucket_by')}); re-run"
             )
-        if bb:
-            manifest["bucket_by"] = dict(bb)
-        # column mapping rides along on appends (the staged files were
-        # translated to physical names); overwrite rewrites everything
-        # with logical names — the mapping materializes away
-        if mode == "append":
-            if parent.get("column_mapping") is not None:
-                manifest["column_mapping"] = parent["column_mapping"]
-            if parent.get("dropped_physical"):
-                manifest["dropped_physical"] = parent["dropped_physical"]
-        # append keeps the parent's merge-on-read deletion vectors (its
-        # files stay, their deleted rows stay deleted); overwrite drops
-        # them with the files they covered
-        if mode == "append" and parent.get("dvs"):
-            manifest["dvs"] = parent["dvs"]
-            manifest["dv_files"] = parent.get("dv_files", [])
-        manifest["schema"] = committed_schema
-        if constraints:
-            manifest["constraints"] = constraints
-        if idempotency_key is not None:
-            manifest["idempotency_key"] = idempotency_key
-        mp = _manifest_path(jvm, table_dir, version)
-        fs.mkdirs(mp.getParent())
-        if not _create_manifest(fs, mp, manifest):
-            continue  # lost the race: re-read head, retry at head+1
-        return version
-    raise IOError(
-        f"could not commit to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+        out = {"schema": schema, "bucket_by": bb}
+        if head == 0:  # first write records the caller's spec
+            out["partition_spec"] = spec or None
+        return out
+
+    return _commit(
+        fs, jvm, table_dir, build, probe=(head0, head0_manifest), new=staged,
+        validated=validated, key=idempotency_key, action=mode,
+    )[0]
 
 
 def _overlaps(stats: dict | None, prune: dict) -> bool:
@@ -1070,10 +1171,9 @@ def read_snapshot_bucketed(
     (``bucket_by`` key + per-file bucket naming).
 
     Refuses: a table whose head (or requested version) lacks the
-    ``bucket_by`` key — DML/optimize/metadata commits deliberately drop
-    it, because one rewritten file without bucket naming silently breaks
-    the co-partitioning contract (wrong join results, not just a slow
-    plan). The cure is an overwrite with the same ``bucket_by``.
+    ``bucket_by`` key — which commits drop it is the carry rule in the
+    module docstring. The cure is an overwrite with the same
+    ``bucket_by``.
     """
     fs, hpath, jvm = _fs(spark, table_dir)
     uri = hpath.toUri()
@@ -1186,68 +1286,22 @@ def rollback(spark: SparkSession, table_dir: str, to_version: int) -> int:
     exactly Delta's RESTORE semantics. Returns the new version."""
     fs, _, jvm = _fs(spark, table_dir)
     target = _read_manifest(fs, jvm, table_dir, to_version)
-    for _attempt in range(100):  # bounded like write_snapshot's commit loop
-        head = current_version(spark, table_dir)
-        version = head + 1
-        manifest = {
-            "version": version,
-            "parent": head,
-            "action": "rollback",
-            "restored": to_version,
-            "files": target["files"],
-            "added": [],
-        }
-        if target.get("stats"):
-            manifest["stats"] = target["stats"]
-        if target.get("blooms"):
-            manifest["blooms"] = target["blooms"]
-        if target.get("rows"):
-            manifest["rows"] = target["rows"]
-        # RESTORE of a version with merge-on-read deletes restores its
-        # deletion vectors too — the sidecars persist until vacuum
-        if target.get("dvs"):
-            manifest["dvs"] = target["dvs"]
-            manifest["dv_files"] = target.get("dv_files", [])
-        if target.get("schema"):
-            # the restored FILES have the restored schema — recording the
-            # head's evolved schema would misdescribe them
-            manifest["schema"] = target["schema"]
-        if target.get("partition_spec"):
-            # likewise the restored files' layout
-            manifest["partition_spec"] = target["partition_spec"]
-        if target.get("spec_history"):
-            manifest["spec_history"] = target["spec_history"]
-        # likewise the restored files' bucket layout (the file SET is
-        # exactly the target's bucket-named files, so the shuffle-free
-        # read path stays valid — dropping the key would also make the
-        # next append stage unbucketed files into a bucketed layout)
-        if target.get("bucket_by"):
-            manifest["bucket_by"] = target["bucket_by"]
-        # likewise the restored files' column mapping (their bytes carry
-        # the physical names the TARGET's schema resolved)
-        if target.get("column_mapping") is not None:
-            manifest["column_mapping"] = target["column_mapping"]
-        if target.get("dropped_physical"):
-            manifest["dropped_physical"] = target["dropped_physical"]
-        # RESTORE restores DATA; table metadata (constraints) stays at
-        # the head's set, Delta-style. Note: the restored rows predate
-        # any constraint added after to_version and were never validated
-        # against it — same caveat as Delta RESTORE.
-        head_cons = (
-            _read_manifest(fs, jvm, table_dir, head).get("constraints", {})
-            if head > 0
-            else {}
-        )
-        if head_cons:
-            manifest["constraints"] = head_cons
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, manifest):
-            continue  # lost the race: rebase onto the new head
-        return version
-    raise IOError(
-        f"could not commit rollback to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    # the restored FILES bring their own stats, deletion vectors (the
+    # sidecars persist until vacuum), schema, partition and bucket layout
+    # and column mapping — the head's would misdescribe them. Table
+    # metadata (constraints) stays at the head's set, Delta-style: the
+    # restored rows predate any constraint added after to_version and
+    # were never validated against it — same caveat as Delta RESTORE.
+    restored = {
+        k: target.get(k)
+        for k in ("files", "stats", "blooms", "rows", "dvs", "dv_files",
+                  *_TABLE_STATE)
+        if k != "constraints"
+    }
+    return _commit(
+        fs, jvm, table_dir, lambda parent, head: restored,
+        action="rollback", restored=to_version,
+    )[0]
 
 
 def snapshot_sink(table_dir: str, mode: str = "append"):
@@ -1462,12 +1516,12 @@ def _staged_meta(
 def _move_staged(fs, jvm, table_dir: str, staging: str, prefix: str, meta):
     """Commit step 1 shared by every writing path: rename each staged
     parquet file under ``data/`` as ``{prefix}-{i}-{name}`` and remove
-    the staging dir. ``meta`` is ``_staged_meta``'s result; returns
-    ``(new_files, new_stats, new_blooms, new_rows)`` keyed by the
-    committed relative paths. The walk is recursive: a partitioned
-    staging tree nests files one hive level per spec column, and names
-    flatten into data/ (part numbers can repeat across partition dirs,
-    the i-counter disambiguates)."""
+    the staging dir. ``meta`` is ``_staged_meta``'s result; returns the
+    ``_Staged`` files and entries keyed by the committed relative paths.
+    The walk is recursive: a partitioned staging tree nests files one
+    hive level per spec column, and names flatten into data/ (part
+    numbers can repeat across partition dirs, the i-counter
+    disambiguates)."""
     Path = jvm.org.apache.hadoop.fs.Path
     staged_stats, staged_rows, staged_blooms = meta
     fs.mkdirs(Path(f"{table_dir}/{_DATA}"))
@@ -1487,7 +1541,7 @@ def _move_staged(fs, jvm, table_dir: str, staging: str, prefix: str, meta):
             new_blooms[rel] = staged_blooms[name]
         new_rows[rel] = staged_rows.get(name, 0)
     fs.delete(Path(staging), True)
-    return new_files, new_stats, new_blooms, new_rows
+    return _Staged(new_files, new_stats, new_blooms, new_rows)
 
 
 def _check_constraints(
@@ -1680,82 +1734,24 @@ def optimize_snapshot(
         # split in staging restores one-value-per-file, so the recomputed
         # min==max stats keep partition pruning exact)
         _stage_df(small_df, staging, manifest.get("partition_spec") or ())
-        new_files, new_stats, new_blooms, new_rows = _move_staged(
+        staged = _move_staged(
             fs, jvm, table_dir, staging, f"o{tag}",
             _staged_meta(
                 spark, staging, small_df.schema, stats_cols, _bloom_specs(manifest)
             ),
         )
-
-        small_set = set(small)
-        for _attempt in range(100):
-            cur = current_version(spark, table_dir)
-            cur_man = manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-            if not small_set.issubset(cur_man["files"]) or any(
-                rel in cur_man.get("dvs", {}) for rel in small_set
-            ):
-                # removed input file, or a concurrent MOR delete vectored
-                # a file this compaction read raw — staging would
-                # resurrect its deleted rows
-                for rel in new_files:
-                    fs.delete(Path(f"{table_dir}/{rel}"), False)
-                raise RuntimeError(
-                    f"concurrent commit touched files this OPTIMIZE rewrote "
-                    f"({table_dir} v{cur}); rerun"
-                )
-            keep = [r for r in cur_man["files"] if r not in small_set]
-            new_manifest = {
-                "version": cur + 1,
-                "parent": cur,
-                "action": "optimize",
-                "files": keep + new_files,
-                "added": new_files,
-                "removed": sorted(small_set),
-            }
-            cur_stats = cur_man.get("stats", {})
-            cur_rows = cur_man.get("rows", {})
-            merged_stats = {
-                **{k: v for k, v in cur_stats.items() if k not in small_set},
-                **new_stats,
-            }
-            merged_rows = {
-                **{k: v for k, v in cur_rows.items() if k not in small_set},
-                **new_rows,
-            }
-            if merged_stats:
-                new_manifest["stats"] = merged_stats
-            if merged_rows:
-                new_manifest["rows"] = merged_rows
-            # untouched files keep their index verbatim; compacted
-            # replacement files get a FRESH bloom at the parent's dial
-            merged_blooms = {
-                **{
-                    k: v
-                    for k, v in cur_man.get("blooms", {}).items()
-                    if k not in small_set
-                },
-                **new_blooms,
-            }
-            if merged_blooms:
-                new_manifest["blooms"] = merged_blooms
-            for key in ("schema", "constraints", "partition_spec", "spec_history"):
-                if cur_man.get(key):
-                    new_manifest[key] = cur_man[key]
-            # DV-carrying files were excluded from compaction — carry
-            # their vectors (dropping the keys would resurrect rows)
-            carried_dvs = {
-                k: v
-                for k, v in cur_man.get("dvs", {}).items()
-                if k not in small_set
-            }
-            if carried_dvs:
-                new_manifest["dvs"] = carried_dvs
-                new_manifest["dv_files"] = cur_man.get("dv_files", [])
-            mp = _manifest_path(jvm, table_dir, cur + 1)
-            if not _create_manifest(fs, mp, new_manifest):
-                continue  # lost the race: rebase onto the new head
-            return cur + 1
-        raise IOError(f"could not commit optimize to {table_dir} after 100 attempts")
+        # untouched files keep their stats, index and vectors verbatim;
+        # compacted replacements get a FRESH bloom at the parent's dial. A
+        # removed input file, or one a concurrent MOR delete vectored
+        # (staging read it raw — committing would resurrect its deleted
+        # rows), refuses
+        return _commit(
+            fs, jvm, table_dir, _unbucketed,
+            probe=(head, manifest), new=staged, removed=small,
+            conflict="concurrent commit touched files this OPTIMIZE rewrote "
+            "({table_dir} v{cur}); rerun",
+            action="optimize",
+        )[0]
 
     total = sum(
         fs.getFileStatus(Path(_data_path(table_dir, rel))).getLen()
@@ -2168,95 +2164,21 @@ def delete_where(
         )
     else:
         fs.mkdirs(Path(staging))  # drop-only delete: nothing to rewrite
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
-        fs, jvm, table_dir, staging, f"d{tag}", meta
-    )
-
-    hit_set = set(hit_files) | set(drop)
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        cur_manifest = manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        cur_files = cur_manifest["files"]
-        if not hit_set.issubset(cur_files) or any(
-            rel in cur_manifest.get("dvs", {}) for rel in hit_set
-        ):
-            # removed hit file, or a concurrent MOR delete vectored one
-            # AFTER our probe (the staged survivors would resurrect it)
-            for rel in new_files:  # staged survivors become debris, not data
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"concurrent commit touched files this DELETE rewrote "
-                f"({table_dir} v{cur}); rerun the delete against the new head"
-            )
-        cur_stats = cur_manifest.get("stats", {})
-        cur_rows = cur_manifest.get("rows", {})
-        files = [rel for rel in cur_files if rel not in hit_set] + new_files
-        merged_stats = {
-            **{k: v for k, v in cur_stats.items() if k not in hit_set},
-            **new_stats,
-        }
-        merged_rows = {
-            **{k: v for k, v in cur_rows.items() if k not in hit_set},
-            **new_rows,
-        }
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "delete",
-            "condition": condition,
-            "files": files,
-            "added": new_files,
-            "removed": sorted(hit_set),
-            "rows_deleted": rows_deleted,
-        }
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        # untouched files' key sets are unchanged so their index stays
-        # exact; rewritten survivor files get a FRESH bloom at the
-        # parent's dial (deletion shrinks key sets — rebuilt, not
-        # inherited, so the index stays tight)
-        merged_blooms = {
-            **{
-                k: v
-                for k, v in cur_manifest.get("blooms", {}).items()
-                if k not in hit_set
-            },
-            **new_blooms,
-        }
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        # survivors are a subset of rows that already satisfied every
-        # row-level CHECK — carry the constraint set, no re-validation;
-        # a DELETE never changes the schema either
-        if cur_manifest.get("constraints"):
-            new_manifest["constraints"] = cur_manifest["constraints"]
-        if cur_manifest.get("schema"):
-            new_manifest["schema"] = cur_manifest["schema"]
-        if cur_manifest.get("partition_spec"):
-            new_manifest["partition_spec"] = cur_manifest["partition_spec"]
-        if cur_manifest.get("spec_history"):
-            new_manifest["spec_history"] = cur_manifest["spec_history"]
-        # deletion vectors on files this DELETE never touched (e.g.
-        # pruned out of the candidate set) MUST carry — dropping the
-        # keys would resurrect their deleted rows (hit files are
-        # DV-free: _refuse_dvs at probe time + the loop check above)
-        carried_dvs = {
-            k: v for k, v in cur_manifest.get("dvs", {}).items() if k not in hit_set
-        }
-        if carried_dvs:
-            new_manifest["dvs"] = carried_dvs
-            new_manifest["dv_files"] = cur_manifest.get("dv_files", [])
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return _result(version, rows_deleted, len(hit_files))
-    raise IOError(
-        f"could not commit delete to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    staged = _move_staged(fs, jvm, table_dir, staging, f"d{tag}", meta)
+    # survivors are a subset of rows that already satisfied every
+    # row-level CHECK, so the constraint set carries without
+    # re-validation; untouched files keep their stats, index and vectors
+    # (hit files are DV-free: _refuse_dvs at probe time, and the commit
+    # refuses one vectored since — the staged survivors would resurrect
+    # its deleted rows)
+    version = _commit(
+        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+        removed=hit_files + drop,
+        conflict="concurrent commit touched files this DELETE rewrote "
+        "({table_dir} v{cur}); rerun the delete against the new head",
+        action="delete", condition=condition, rows_deleted=rows_deleted,
+    )[0]
+    return _result(version, rows_deleted, len(hit_files))
 
 
 def _sql_lit(v) -> str:
@@ -2481,91 +2403,19 @@ def update_where(
             f"rows from {hit_rows_before} — an assignment expression changed "
             "row counts, refusing to commit"
         )
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
-        fs, jvm, table_dir, staging, f"u{tag}", meta
-    )
-
-    hit_set = set(hit_files)
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        cur_files = cur_manifest["files"]
-        if not hit_set.issubset(cur_files) or any(
-            rel in cur_manifest.get("dvs", {}) for rel in hit_set
-        ):
-            # removed hit file, or a concurrent MOR delete vectored one
-            # AFTER our probe (the staged rewrite would resurrect it)
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"concurrent commit touched files this UPDATE rewrote "
-                f"({table_dir} v{cur}); rerun the update against the new head"
-            )
-        if cur_manifest.get("constraints", {}) != constraints:
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"constraint set changed concurrently on {table_dir} "
-                f"(validated against v{head}, head is v{cur}); re-run the update"
-            )
-        files = [rel for rel in cur_files if rel not in hit_set] + new_files
-        merged_stats = {
-            **{k: v for k, v in cur_manifest.get("stats", {}).items() if k not in hit_set},
-            **new_stats,
-        }
-        merged_blooms = {
-            **{k: v for k, v in cur_manifest.get("blooms", {}).items() if k not in hit_set},
-            **new_blooms,
-        }
-        merged_rows = {
-            **{k: v for k, v in cur_manifest.get("rows", {}).items() if k not in hit_set},
-            **new_rows,
-        }
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "update",
-            "condition": condition,
-            "set": dict(sorted(assignments.items())),
-            "files": files,
-            "added": new_files,
-            "removed": sorted(hit_set),
-            "rows_updated": rows_updated,
-        }
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        if constraints:
-            new_manifest["constraints"] = constraints
-        if cur_manifest.get("schema"):
-            new_manifest["schema"] = cur_manifest["schema"]
-        if cur_manifest.get("partition_spec"):
-            new_manifest["partition_spec"] = cur_manifest["partition_spec"]
-        if cur_manifest.get("spec_history"):
-            new_manifest["spec_history"] = cur_manifest["spec_history"]
-        # carry deletion vectors on untouched files — dropping the keys
-        # would resurrect their deleted rows (hit files are DV-free:
-        # _refuse_dvs at probe time + the loop check above)
-        carried_dvs = {
-            k: v for k, v in cur_manifest.get("dvs", {}).items() if k not in hit_set
-        }
-        if carried_dvs:
-            new_manifest["dvs"] = carried_dvs
-            new_manifest["dv_files"] = cur_manifest.get("dv_files", [])
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return _result(version, rows_updated, len(hit_files))
-    raise IOError(
-        f"could not commit update to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    # hit files are DV-free (_refuse_dvs at probe time); the commit
+    # refuses one vectored since (the staged rewrite would resurrect it)
+    version = _commit(
+        fs, jvm, table_dir, _unbucketed, probe=(head, manifest),
+        new=_move_staged(fs, jvm, table_dir, staging, f"u{tag}", meta),
+        removed=hit_files,
+        conflict="concurrent commit touched files this UPDATE rewrote "
+        "({table_dir} v{cur}); rerun the update against the new head",
+        validated=constraints, redo="update",
+        action="update", condition=condition,
+        set=dict(sorted(assignments.items())), rows_updated=rows_updated,
+    )[0]
+    return _result(version, rows_updated, len(hit_files))
 
 
 def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
@@ -2771,7 +2621,6 @@ def _mor_delete(
     _refuse_mapping(manifest, op_name)
     all_files = manifest["files"]
     stats = manifest.get("stats", {})
-    dvs = dict(manifest.get("dvs", {}))
 
     candidates = all_files
     if prune:
@@ -2819,63 +2668,14 @@ def _mor_delete(
     new_counts = {by_name[name]: n for name, n in per_file.items()}
     rows_deleted = sum(new_counts.values())
 
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        cur_files = set(cur_manifest["files"])
-        cur_dvs = cur_manifest.get("dvs", {})
-        for rel in new_counts:
-            if rel not in cur_files or cur_dvs.get(rel) != dvs.get(rel):
-                fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-                raise RuntimeError(
-                    f"concurrent commit touched {rel} after this MOR delete "
-                    f"probed it ({table_dir} v{cur}); rerun against the new head"
-                )
-        version = cur + 1
-        new_manifest = {
-            **{
-                k: v
-                for k, v in cur_manifest.items()
-                if k not in ("version", "parent", "action", "added", "removed",
-                             "condition", "dvs", "dv_files", "dv_added",
-                             "rows_deleted", "rows_updated", "rows_inserted",
-                             "restored", "source", "set",
-                             # per-commit metadata that must NOT replicate
-                             # into this commit (r6 fix: a carried
-                             # idempotency_key made an unrelated MOR
-                             # delete answer another commit's exactly-once
-                             # replay probe with wrong accounting)
-                             "idempotency_key", "rows_removed",
-                             "files_rewritten", "renamed", "dropped",
-                             "spec_from", "spec_to")
-            },
-            "version": version,
-            "parent": cur,
-            "action": "mor_delete",
-            "condition": condition_desc,
-            "added": [],
-            "removed": [],
-            "dvs": {
-                **cur_dvs,
-                **{
-                    rel: int(cur_dvs.get(rel, 0)) + n
-                    for rel, n in new_counts.items()
-                },
-            },
-            "dv_files": list(cur_manifest.get("dv_files", [])) + [dv_rel],
-            "dv_added": [dv_rel],
-            "rows_deleted": rows_deleted,
-        }
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return _result(version, rows_deleted, len(new_counts))
-    raise IOError(
-        f"could not commit MOR delete to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    version = _commit(
+        fs, jvm, table_dir, probe=(head, manifest), removed=(),
+        vectored=new_counts, sidecar=dv_rel,
+        conflict="concurrent commit touched {rel} after this MOR delete "
+        "probed it ({table_dir} v{cur}); rerun against the new head",
+        action="mor_delete", condition=condition_desc, rows_deleted=rows_deleted,
+    )[0]
+    return _result(version, rows_deleted, len(new_counts))
 
 
 def delete_keys_mor(
@@ -2965,7 +2765,6 @@ def update_where_mor(
     _refuse_mapping(manifest, "update_where_mor")
     all_files = manifest["files"]
     stats = manifest.get("stats", {})
-    dvs = dict(manifest.get("dvs", {}))
 
     candidates = all_files
     if prune:
@@ -3056,81 +2855,17 @@ def update_where_mor(
             f"{staged_total} rows for {rows_updated} vectored — "
             "an assignment expression changed row counts, refusing to commit"
         )
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
-        fs, jvm, table_dir, staging, f"w{tag}", meta
-    )
-
-    def _undo():
-        for rel in new_files:
-            fs.delete(Path(f"{table_dir}/{rel}"), False)
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        cur_files = set(cur_manifest["files"])
-        cur_dvs = cur_manifest.get("dvs", {})
-        for rel in new_counts:
-            if rel not in cur_files or cur_dvs.get(rel) != dvs.get(rel):
-                _undo()
-                raise RuntimeError(
-                    f"concurrent commit touched {rel} after this MOR update "
-                    f"probed it ({table_dir} v{cur}); rerun against the new head"
-                )
-        if cur_manifest.get("constraints", {}) != constraints:
-            _undo()
-            raise RuntimeError(
-                f"constraint set changed concurrently on {table_dir} "
-                f"(validated against v{head}, head is v{cur}); re-run the update"
-            )
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "mor_update",
-            "condition": condition,
-            "set": dict(sorted(assignments.items())),
-            "files": list(cur_manifest["files"]) + new_files,
-            "added": new_files,
-            "removed": [],
-            "dvs": {
-                **cur_dvs,
-                **{
-                    rel: int(cur_dvs.get(rel, 0)) + n
-                    for rel, n in new_counts.items()
-                },
-            },
-            "dv_files": list(cur_manifest.get("dv_files", [])) + [dv_rel],
-            "dv_added": [dv_rel],
-            "rows_updated": rows_updated,
-        }
-        merged_stats = {**cur_manifest.get("stats", {}), **new_stats}
-        merged_blooms = {**cur_manifest.get("blooms", {}), **new_blooms}
-        merged_rows = {**cur_manifest.get("rows", {}), **new_rows}
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        if constraints:
-            new_manifest["constraints"] = constraints
-        if cur_manifest.get("schema"):
-            new_manifest["schema"] = cur_manifest["schema"]
-        if cur_manifest.get("partition_spec"):
-            new_manifest["partition_spec"] = cur_manifest["partition_spec"]
-        if cur_manifest.get("spec_history"):
-            new_manifest["spec_history"] = cur_manifest["spec_history"]
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return _result(version, rows_updated, len(new_counts), len(new_files))
-    raise IOError(
-        f"could not commit MOR update to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    staged = _move_staged(fs, jvm, table_dir, staging, f"w{tag}", meta)
+    version = _commit(
+        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+        removed=(), vectored=new_counts, sidecar=dv_rel,
+        conflict="concurrent commit touched {rel} after this MOR update "
+        "probed it ({table_dir} v{cur}); rerun against the new head",
+        validated=constraints, redo="update",
+        action="mor_update", condition=condition,
+        set=dict(sorted(assignments.items())), rows_updated=rows_updated,
+    )[0]
+    return _result(version, rows_updated, len(new_counts), len(staged.files))
 
 
 def merge_into_mor(
@@ -3198,7 +2933,6 @@ def merge_into_mor(
     manifest = _read_manifest(fs, jvm, table_dir, head)
     _refuse_mapping(manifest, "merge_into_mor")
     all_files = manifest["files"]
-    dvs = dict(manifest.get("dvs", {}))
     keys = list(key_cols)
     tcols = [f["name"] for f in manifest.get("schema", {}).get("fields", [])]
     if tcols and delete_condition is None and source.columns != tcols:
@@ -3314,106 +3048,30 @@ def merge_into_mor(
             "files_rewritten": 0,
         }
 
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
-        fs, jvm, table_dir, staging, f"g{tag}", meta
-    )
+    staged = _move_staged(fs, jvm, table_dir, staging, f"g{tag}", meta)
     if not new_counts:
         fs.delete(Path(f"{table_dir}/{dv_rel}"), True)  # pure-insert merge
-
-    def _undo_files():
-        for rel in new_files:
-            fs.delete(Path(f"{table_dir}/{rel}"), False)
-        if new_counts:
-            fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        if idempotency_key is not None and cur != head:
-            prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, cur)
-            if prior is not None:
-                _undo_files()
-                return _replayed(prior)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        cur_files = set(cur_manifest["files"])
-        cur_dvs = cur_manifest.get("dvs", {})
-        for rel in new_counts:
-            if rel not in cur_files or cur_dvs.get(rel) != dvs.get(rel):
-                _undo_files()
-                raise RuntimeError(
-                    f"concurrent commit touched {rel} after this MOR merge "
-                    f"probed it ({table_dir} v{cur}); rerun against the new head"
-                )
-        if cur_manifest.get("constraints", {}) != constraints:
-            _undo_files()
-            raise RuntimeError(
-                f"constraint set changed concurrently on {table_dir} "
-                f"(validated against v{head}, head is v{cur}); re-run the merge"
-            )
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "mor_merge",
-            "files": list(cur_manifest["files"]) + new_files,
-            "added": new_files,
-            "removed": [],
-            "rows_updated": rows_updated,
-            "rows_deleted": rows_deleted,
-            "rows_inserted": rows_inserted,
-            "mor_files_with_dvs": len(new_counts),
-        }
-        if new_counts:
-            new_manifest["dvs"] = {
-                **cur_dvs,
-                **{
-                    rel: int(cur_dvs.get(rel, 0)) + n
-                    for rel, n in new_counts.items()
-                },
-            }
-            new_manifest["dv_files"] = (
-                list(cur_manifest.get("dv_files", [])) + [dv_rel]
-            )
-            new_manifest["dv_added"] = [dv_rel]
-        elif cur_manifest.get("dvs"):
-            new_manifest["dvs"] = cur_manifest["dvs"]
-            new_manifest["dv_files"] = cur_manifest.get("dv_files", [])
-        merged_stats = {**cur_manifest.get("stats", {}), **new_stats}
-        merged_blooms = {**cur_manifest.get("blooms", {}), **new_blooms}
-        merged_rows = {**cur_manifest.get("rows", {}), **new_rows}
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        if constraints:
-            new_manifest["constraints"] = constraints
-        if cur_manifest.get("schema"):
-            new_manifest["schema"] = cur_manifest["schema"]
-        if cur_manifest.get("partition_spec"):
-            new_manifest["partition_spec"] = cur_manifest["partition_spec"]
-        if cur_manifest.get("spec_history"):
-            new_manifest["spec_history"] = cur_manifest["spec_history"]
-        if idempotency_key is not None:
-            new_manifest["idempotency_key"] = idempotency_key
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return {
-            "version": version,
-            "rows_updated": rows_updated,
-            "rows_deleted": rows_deleted,
-            "rows_inserted": rows_inserted,
-            "files_with_dvs": len(new_counts),
-            "files_added": len(new_files),
-            "files_rewritten": 0,
-        }
-    raise IOError(
-        f"could not commit MOR merge to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
+    version, fresh = _commit(
+        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+        removed=(), vectored=new_counts, sidecar=dv_rel if new_counts else None,
+        conflict="concurrent commit touched {rel} after this MOR merge "
+        "probed it ({table_dir} v{cur}); rerun against the new head",
+        validated=constraints, redo="merge", key=idempotency_key,
+        action="mor_merge", rows_updated=rows_updated,
+        rows_deleted=rows_deleted, rows_inserted=rows_inserted,
+        mor_files_with_dvs=len(new_counts),
     )
+    if not fresh:
+        return _replayed(version)
+    return {
+        "version": version,
+        "rows_updated": rows_updated,
+        "rows_deleted": rows_deleted,
+        "rows_inserted": rows_inserted,
+        "files_with_dvs": len(new_counts),
+        "files_added": len(staged.files),
+        "files_rewritten": 0,
+    }
 
 
 def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
@@ -3431,7 +3089,6 @@ def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
     ``{"version", "files_rewritten", "rows_removed"}``.
     """
     fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
     head = current_version(spark, table_dir)
     if head == 0:
         raise FileNotFoundError(f"{table_dir} has no committed snapshots")
@@ -3447,84 +3104,25 @@ def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
     staging = f"{table_dir}/staging-{tag}"
     live = _read_with_dvs(spark, table_dir, manifest, hit_files)
     live.write.parquet(staging)
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
+    staged = _move_staged(
         fs, jvm, table_dir, staging, f"p{tag}",
         _staged_meta(
             spark, staging, live.schema, _stats_cols(manifest), _bloom_specs(manifest)
         ),
     )
-
-    hit_set = set(hit_files)
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        if (
-            not hit_set.issubset(cur_manifest["files"])
-            or {k: cur_manifest.get("dvs", {}).get(k) for k in hit_set}
-            != {k: dvs.get(k) for k in hit_set}
-        ):
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"concurrent commit touched DV'd files during materialize "
-                f"({table_dir} v{cur}); rerun against the new head"
-            )
-        files = [rel for rel in cur_manifest["files"] if rel not in hit_set] + new_files
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "materialize_dv",
-            "files": files,
-            "added": new_files,
-            "removed": sorted(hit_set),
-            "rows_removed": rows_removed,
-        }
-        merged_stats = {
-            **{k: v for k, v in cur_manifest.get("stats", {}).items() if k not in hit_set},
-            **new_stats,
-        }
-        merged_blooms = {
-            **{k: v for k, v in cur_manifest.get("blooms", {}).items() if k not in hit_set},
-            **new_blooms,
-        }
-        merged_rows = {
-            **{k: v for k, v in cur_manifest.get("rows", {}).items() if k not in hit_set},
-            **new_rows,
-        }
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        leftover = {
-            k: v for k, v in cur_manifest.get("dvs", {}).items() if k not in hit_set
-        }
-        if leftover:  # DVs landed on other files while we staged
-            new_manifest["dvs"] = leftover
-            new_manifest["dv_files"] = cur_manifest.get("dv_files", [])
-        # table-level keys MUST carry (r6 fix: materialize dropped the
-        # partition spec, demoting the table to unpartitioned metadata —
-        # rewritten files may straddle partition values, which pruning
-        # tolerates via stats, but the SPEC itself governs future appends)
-        for key in ("schema", "constraints", "partition_spec", "spec_history"):
-            if cur_manifest.get(key):
-                new_manifest[key] = cur_manifest[key]
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return {
-            "version": version,
-            "files_rewritten": len(hit_files),
-            "rows_removed": rows_removed,
-        }
-    raise IOError(
-        f"could not commit materialize to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
-    )
+    # vectors that landed on other files while we staged carry
+    version = _commit(
+        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+        removed=hit_files,
+        conflict="concurrent commit touched DV'd files during materialize "
+        "({table_dir} v{cur}); rerun against the new head",
+        action="materialize_dv", rows_removed=rows_removed,
+    )[0]
+    return {
+        "version": version,
+        "files_rewritten": len(hit_files),
+        "rows_removed": rows_removed,
+    }
 
 
 def merge_into(
@@ -3728,7 +3326,7 @@ def merge_into(
         spark, staging, staged_df.schema, constraints,
         "merged row(s) — MERGE refused", lambda: fs.delete(Path(staging), True),
     )
-    new_files, new_stats, new_blooms, new_rows = _move_staged(
+    staged = _move_staged(
         fs, jvm, table_dir, staging, f"m{tag}",
         _staged_meta(
             spark, staging, staged_df.schema, _stats_cols(manifest),
@@ -3736,106 +3334,38 @@ def merge_into(
         ),
     )
 
-    hit_set = set(hit_files)
     hit_rows_before = sum(manifest.get("rows", {}).get(rel, 0) for rel in hit_files)
-    rows_inserted = sum(new_rows.values()) - hit_rows_before + rows_deleted
+    rows_inserted = sum(staged.rows.values()) - hit_rows_before + rows_deleted
     if not hit_files and rows_inserted == 0:
         # nothing matched, nothing to insert: drop the empty staged
         # file(s), commit nothing
-        for rel in new_files:
+        for rel in staged.files:
             fs.delete(Path(f"{table_dir}/{rel}"), False)
         return _result(head)
 
-    for _attempt in range(100):
-        cur = current_version(spark, table_dir)
-        if idempotency_key is not None and cur != head:
-            prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, cur)
-            if prior is not None:
-                for rel in new_files:
-                    fs.delete(Path(f"{table_dir}/{rel}"), False)
-                return _replayed(prior)
-        cur_manifest = (
-            manifest if cur == head else _read_manifest(fs, jvm, table_dir, cur)
-        )
-        cur_files = cur_manifest["files"]
-        if not hit_set.issubset(cur_files) or cur_manifest.get("dvs"):
-            # removed hit file, or a concurrent MOR delete landed after
-            # this merge probed a DV-free table (raw-read staging would
-            # resurrect vectored rows; committing would drop the vectors)
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"concurrent commit touched files this MERGE rewrote "
-                f"({table_dir} v{cur}); rerun the merge against the new head"
-            )
-        if cur_manifest.get("constraints", {}) != constraints:
-            for rel in new_files:
-                fs.delete(Path(f"{table_dir}/{rel}"), False)
-            raise RuntimeError(
-                f"constraint set changed concurrently on {table_dir} "
-                f"(validated against v{head}, head is v{cur}); re-run the merge"
-            )
-        files = [rel for rel in cur_files if rel not in hit_set] + new_files
-        merged_stats = {
-            **{
-                k: v
-                for k, v in cur_manifest.get("stats", {}).items()
-                if k not in hit_set
-            },
-            **new_stats,
-        }
-        merged_blooms = {
-            **{
-                k: v
-                for k, v in cur_manifest.get("blooms", {}).items()
-                if k not in hit_set
-            },
-            **new_blooms,
-        }
-        merged_rows = {
-            **{
-                k: v
-                for k, v in cur_manifest.get("rows", {}).items()
-                if k not in hit_set
-            },
-            **new_rows,
-        }
-        version = cur + 1
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "action": "merge",
-            "files": files,
-            "added": new_files,
-            "removed": sorted(hit_set),
-            "rows_updated": rows_updated,
-            "rows_deleted": rows_deleted,
-            "rows_inserted": rows_inserted,
-        }
-        if merged_stats:
-            new_manifest["stats"] = merged_stats
-        if merged_blooms:
-            new_manifest["blooms"] = merged_blooms
-        if merged_rows:
-            new_manifest["rows"] = merged_rows
-        if constraints:
-            new_manifest["constraints"] = constraints
-        if cur_manifest.get("schema"):
-            new_manifest["schema"] = cur_manifest["schema"]
-        if cur_manifest.get("partition_spec"):
-            new_manifest["partition_spec"] = cur_manifest["partition_spec"]
-        if cur_manifest.get("spec_history"):
-            new_manifest["spec_history"] = cur_manifest["spec_history"]
-        if idempotency_key is not None:
-            new_manifest["idempotency_key"] = idempotency_key
-        mp = _manifest_path(jvm, table_dir, version)
-        if not _create_manifest(fs, mp, new_manifest):
-            continue  # lost the race: rebase onto the new head
-        return _result(version, len(hit_files), rows_inserted)
-    raise IOError(
-        f"could not commit merge to {table_dir} after 100 attempts — "
-        "manifest create keeps failing (permissions/path problem, not contention)"
+    conflict = (
+        "concurrent commit touched files this MERGE rewrote "
+        "({table_dir} v{cur}); rerun the merge against the new head"
     )
+
+    def build(parent: dict, cur: int) -> dict:
+        # a concurrent MOR delete anywhere, even on a file this merge did
+        # not hit: the raw-read staging and insert anti-join would
+        # resurrect vectored rows, and committing would drop the vectors
+        if parent.get("dvs"):
+            raise RuntimeError(conflict.format(table_dir=table_dir, cur=cur))
+        return _unbucketed(parent, cur)
+
+    version, fresh = _commit(
+        fs, jvm, table_dir, build, probe=(head, manifest), new=staged,
+        removed=hit_files, conflict=conflict,
+        validated=constraints, redo="merge", key=idempotency_key,
+        action="merge", rows_updated=rows_updated,
+        rows_deleted=rows_deleted, rows_inserted=rows_inserted,
+    )
+    if not fresh:
+        return _replayed(version)
+    return _result(version, len(hit_files), rows_inserted)
 
 
 def apply_changes(
@@ -4118,39 +3648,6 @@ def count_where(
     }
 
 
-def _commit_metadata(fs, jvm, table_dir: str, build) -> int:
-    """Shared optimistic metadata-only commit: ``build(head_manifest,
-    version)`` returns the new manifest dict; the create-if-absent loop
-    handles races exactly like data commits."""
-    for _attempt in range(100):
-        head = current_version_from_fs(fs, jvm, table_dir)
-        if head == 0:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        parent = _read_manifest(fs, jvm, table_dir, head)
-        manifest = build(parent, head + 1)
-        mp = _manifest_path(jvm, table_dir, head + 1)
-        if not _create_manifest(fs, mp, manifest):
-            continue  # lost the race: rebase onto the new head
-        return head + 1
-    raise IOError(f"could not commit metadata to {table_dir} after 100 attempts")
-
-
-def current_version_from_fs(fs, jvm, table_dir: str) -> int:
-    """`current_version` without re-resolving the FileSystem (loop helper)."""
-    log_path = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{_LOG}")
-    if not fs.exists(log_path):
-        return 0
-    best = 0
-    for st in fs.listStatus(log_path):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                best = max(best, int(name[1:-5]))
-            except ValueError:
-                continue
-    return best
-
-
 def add_constraint(
     spark: SparkSession, table_dir: str, name: str, expr: str
 ) -> int:
@@ -4181,32 +3678,10 @@ def add_constraint(
             "row(s) violate it"
         )
 
-    def build(parent: dict, version: int) -> dict:
-        cons = dict(parent.get("constraints", {}))
-        cons[name] = expr
-        man = {
-            "version": version,
-            "parent": parent["version"],
-            "action": "set_constraint",
-            "files": parent["files"],
-            "added": [],
-            "constraints": cons,
-        }
-        # dvs/dv_files MUST carry (the DV-carry invariant: a metadata
-        # commit that drops them resurrects merge-on-read-deleted rows);
-        # so must the COLUMN MAPPING (r6 fix: dropping it demaps a
-        # renamed/dropped-column table — reads revert to physical names
-        # and the next append writes mixed name generations)
-        for k in ("stats", "rows", "blooms", "schema", "dvs", "dv_files",
-                  "partition_spec", "spec_history", "bucket_by",
-                  "dropped_physical"):
-            if parent.get(k):
-                man[k] = parent[k]
-        if parent.get("column_mapping") is not None:  # {} is meaningful
-            man["column_mapping"] = parent["column_mapping"]
-        return man
+    def build(parent: dict, head: int) -> dict:
+        return {"constraints": {**parent.get("constraints", {}), name: expr}}
 
-    return _commit_metadata(fs, jvm, table_dir, build)
+    return _commit(fs, jvm, table_dir, build, action="set_constraint")[0]
 
 
 def _constraint_mentions(constraints: dict, col: str) -> list[str]:
@@ -4233,7 +3708,7 @@ def rename_column(spark: SparkSession, table_dir: str, old: str, new: str) -> in
     full-rewrite overwrite materializes the mapping."""
     fs, _, jvm = _fs(spark, table_dir)
 
-    def build(parent: dict, version: int) -> dict:
+    def build(parent: dict, head: int) -> dict:
         fields = parent.get("schema", {}).get("fields")
         if not fields:
             raise ValueError(f"{table_dir} has no tracked schema to rename in")
@@ -4248,16 +3723,16 @@ def rename_column(spark: SparkSession, table_dir: str, old: str, new: str) -> in
                 f"column {old!r} is referenced by CHECK constraint(s) {hit} "
                 "— drop them first (their expressions cannot be rewritten)"
             )
+        spec = parent.get("partition_spec") or []
+        if any(c != old and _spec_source_col(c) == old for c in spec):
+            raise ValueError(
+                f"column {old!r} is the source of a derived partition "
+                f"transform in {list(spec)} — the transform label "
+                "cannot be rewritten; re-partition via overwrite first"
+            )
         mapping = dict(parent.get("column_mapping", {}))
-        physical = mapping.pop(old, old)
-        mapping[new] = physical
-        man = {
-            "version": version,
-            "parent": parent["version"],
-            "action": "rename_column",
-            "renamed": {"from": old, "to": new},
-            "files": parent["files"],
-            "added": [],
+        mapping[new] = mapping.pop(old, old)
+        return {
             "column_mapping": mapping,
             "schema": dict(
                 parent["schema"],
@@ -4265,25 +3740,14 @@ def rename_column(spark: SparkSession, table_dir: str, old: str, new: str) -> in
                     dict(f, name=new) if f["name"] == old else f for f in fields
                 ],
             ),
+            "partition_spec": [new if c == old else c for c in spec] or None,
+            "bucket_by": None,  # see the carry rule (module docstring)
         }
-        spec = parent.get("partition_spec")
-        if spec:
-            if any(
-                c != old and _spec_source_col(c) == old for c in spec
-            ):
-                raise ValueError(
-                    f"column {old!r} is the source of a derived partition "
-                    f"transform in {list(spec)} — the transform label "
-                    "cannot be rewritten; re-partition via overwrite first"
-                )
-            man["partition_spec"] = [new if c == old else c for c in spec]
-        for k in ("stats", "rows", "blooms", "constraints", "dvs",
-                  "dv_files", "dropped_physical", "spec_history"):
-            if parent.get(k):
-                man[k] = parent[k]
-        return man
 
-    return _commit_metadata(fs, jvm, table_dir, build)
+    return _commit(
+        fs, jvm, table_dir, build, action="rename_column",
+        renamed={"from": old, "to": new},
+    )[0]
 
 
 def drop_column(spark: SparkSession, table_dir: str, name: str) -> int:
@@ -4296,7 +3760,7 @@ def drop_column(spark: SparkSession, table_dir: str, name: str) -> int:
     constraint."""
     fs, _, jvm = _fs(spark, table_dir)
 
-    def build(parent: dict, version: int) -> dict:
+    def build(parent: dict, head: int) -> dict:
         fields = parent.get("schema", {}).get("fields")
         if not fields:
             raise ValueError(f"{table_dir} has no tracked schema to drop from")
@@ -4317,13 +3781,7 @@ def drop_column(spark: SparkSession, table_dir: str, name: str) -> int:
             )
         mapping = dict(parent.get("column_mapping", {}))
         physical = mapping.pop(name, name)
-        man = {
-            "version": version,
-            "parent": parent["version"],
-            "action": "drop_column",
-            "dropped": name,
-            "files": parent["files"],
-            "added": [],
+        return {
             # mapping key present (even if empty) = schema-projected reads
             "column_mapping": mapping,
             "dropped_physical": sorted(
@@ -4333,14 +3791,10 @@ def drop_column(spark: SparkSession, table_dir: str, name: str) -> int:
                 parent["schema"],
                 fields=[f for f in fields if f["name"] != name],
             ),
+            "bucket_by": None,  # see the carry rule (module docstring)
         }
-        for k in ("stats", "rows", "blooms", "constraints", "dvs",
-                  "dv_files", "partition_spec", "spec_history"):
-            if parent.get(k):
-                man[k] = parent[k]
-        return man
 
-    return _commit_metadata(fs, jvm, table_dir, build)
+    return _commit(fs, jvm, table_dir, build, action="drop_column", dropped=name)[0]
 
 
 def evolve_partition_spec(
@@ -4382,7 +3836,7 @@ def evolve_partition_spec(
     fs, _, jvm = _fs(spark, table_dir)
     spec = [str(c) for c in new_spec]
 
-    def build(parent: dict, version: int) -> dict:
+    def build(parent: dict, head: int) -> dict:
         _refuse_mapping(parent, "evolve_partition_spec")
         if parent.get("bucket_by"):
             raise ValueError(
@@ -4404,29 +3858,17 @@ def evolve_partition_spec(
                 raise ValueError(
                     f"partition spec sources not in table schema: {missing}"
                 )
-        man = {
-            "version": version,
-            "parent": parent["version"],
-            "action": "evolve_spec",
-            "spec_from": old,
-            "spec_to": spec,
-            "files": parent["files"],
-            "added": [],
-        }
-        if spec:
-            man["partition_spec"] = spec
         hist = list(parent.get("spec_history", []))
         if old:
-            hist = hist + [{"spec": old, "until_version": version}]
-        if hist:
-            man["spec_history"] = hist
-        for k in ("stats", "rows", "blooms", "schema", "constraints",
-                  "dvs", "dv_files"):
-            if parent.get(k):
-                man[k] = parent[k]
-        return man
+            hist = hist + [{"spec": old, "until_version": head + 1}]
+        return {
+            "spec_from": old,
+            "spec_to": spec,
+            "partition_spec": spec or None,
+            "spec_history": hist or None,
+        }
 
-    return _commit_metadata(fs, jvm, table_dir, build)
+    return _commit(fs, jvm, table_dir, build, action="evolve_spec")[0]
 
 
 def drop_constraint(spark: SparkSession, table_dir: str, name: str) -> int:
@@ -4437,28 +3879,12 @@ def drop_constraint(spark: SparkSession, table_dir: str, name: str) -> int:
     if name not in _read_manifest(fs, jvm, table_dir, head).get("constraints", {}):
         raise KeyError(f"no CHECK constraint {name!r} on {table_dir}")
 
-    def build(parent: dict, version: int) -> dict:
+    def build(parent: dict, head: int) -> dict:
         cons = dict(parent.get("constraints", {}))
         cons.pop(name, None)
-        man = {
-            "version": version,
-            "parent": parent["version"],
-            "action": "drop_constraint",
-            "files": parent["files"],
-            "added": [],
-        }
-        if cons:
-            man["constraints"] = cons
-        for k in ("stats", "rows", "blooms", "schema", "dvs", "dv_files",
-                  "partition_spec", "spec_history", "bucket_by",
-                  "dropped_physical"):
-            if parent.get(k):
-                man[k] = parent[k]
-        if parent.get("column_mapping") is not None:  # {} is meaningful
-            man["column_mapping"] = parent["column_mapping"]
-        return man
+        return {"constraints": cons or None}
 
-    return _commit_metadata(fs, jvm, table_dir, build)
+    return _commit(fs, jvm, table_dir, build, action="drop_constraint")[0]
 
 
 def describe_detail(spark: SparkSession, table_dir: str) -> dict:
@@ -4607,42 +4033,26 @@ def shallow_clone(
     def _abs(rel: str) -> str:
         return _data_path(src_dir, rel)
 
-    manifest = {
-        "version": 1,
-        "parent": 0,
-        "action": "clone",
-        "source": {"table_dir": src_dir, "version": version},
-        "files": [_abs(rel) for rel in src["files"]],
-        "added": [],
-    }
-    for key in ("stats", "rows", "blooms"):
-        if src.get(key):
-            manifest[key] = {_abs(rel): v for rel, v in src[key].items()}
+    # table state carries verbatim (the clone references the source's
+    # bucket-named files as they are)
+    state = {k: src.get(k) for k in _TABLE_STATE}
+    state["files"] = [_abs(rel) for rel in src["files"]]
+    for key in ("stats", "rows", "blooms", "dvs"):
+        state[key] = {_abs(rel): v for rel, v in src.get(key, {}).items()}
     if src.get("dvs"):
         # the clone keeps seeing the source's merge-on-read deletes;
         # its own materialize_dvs rewrites into its OWN data/
-        manifest["dvs"] = {_abs(rel): v for rel, v in src["dvs"].items()}
-        manifest["dv_files"] = [_abs(rel) for rel in src.get("dv_files", [])]
-    if src.get("schema"):
-        manifest["schema"] = src["schema"]
-    if src.get("constraints"):
-        manifest["constraints"] = src["constraints"]
-    if src.get("partition_spec"):
-        manifest["partition_spec"] = src["partition_spec"]
-    if src.get("spec_history"):
-        manifest["spec_history"] = src["spec_history"]
-    if src.get("bucket_by"):
-        # the clone references the source's bucket-named files verbatim
-        manifest["bucket_by"] = src["bucket_by"]
-    if src.get("column_mapping") is not None:
-        manifest["column_mapping"] = src["column_mapping"]
-    if src.get("dropped_physical"):
-        manifest["dropped_physical"] = src["dropped_physical"]
-    mp = _manifest_path(jvm, dst_dir, 1)
-    fs.mkdirs(mp.getParent())
-    if not _create_manifest(fs, mp, manifest):  # a racing clone into dst
-        raise FileExistsError(f"{dst_dir} v1 manifest already exists")
-    return 1
+        state["dv_files"] = [_abs(rel) for rel in src.get("dv_files", [])]
+
+    def build(parent: dict, head: int) -> dict:
+        if head:  # a racing clone into dst won
+            raise FileExistsError(f"{dst_dir} v1 manifest already exists")
+        return state
+
+    return _commit(
+        fs, jvm, dst_dir, build, probe=(0, {}), action="clone",
+        source={"table_dir": src_dir, "version": version},
+    )[0]
 
 
 def read_changes_cdf(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import faulthandler
 import os
 import sys
 
@@ -8,6 +10,11 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# Hang watchdog: a test still running after this many seconds dumps every
+# thread's stack and ends the run. The slowest test takes about a minute
+# on 4 cores; pytest-timeout is not available.
+_HANG_S = 600
 
 # Make google.protobuf available (driver + forked Python workers) when the
 # env has no protobuf wheel, so the transformWithStateInPandas e2e test can
@@ -45,3 +52,21 @@ def tables(spark):
     from jobanalytics_bigdataproject_spark.sources.readers import load_star
 
     return load_star(spark, SF_DIR)
+
+
+@pytest.fixture(scope="session")
+def _stderr_fd(pytestconfig):
+    """A copy of the real stderr, taken with output capture suspended, so
+    the watchdog's dump reaches the terminal instead of a capture file."""
+    capman = pytestconfig.pluginmanager.getplugin("capturemanager")
+    with capman.global_and_fixture_disabled() if capman else contextlib.nullcontext():
+        fd = os.dup(2)
+    yield fd
+    os.close(fd)
+
+
+@pytest.fixture(autouse=True)
+def _hang_watchdog(_stderr_fd):
+    faulthandler.dump_traceback_later(_HANG_S, exit=True, file=_stderr_fd)
+    yield
+    faulthandler.cancel_dump_traceback_later()

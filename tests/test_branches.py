@@ -121,15 +121,15 @@ def test_lost_race_rolls_back_renames(spark, tmp_path, monkeypatch):
     snap.write_snapshot(
         spark.createDataFrame([(3000, 1, 1)], "id int, grp int, val long"), b
     )
-    real_commit = br._commit_metadata
-    def race_then_fail(fs, jvm, table_dir, build):
+    real_commit = br._commit
+    def race_then_fail(fs, jvm, table_dir, build, **kw):
         # simulate: another writer advanced main first
         snap.write_snapshot(
             spark.createDataFrame([(4000, 2, 2)], "id int, grp int, val long"),
             t,
         )
-        return real_commit(fs, jvm, table_dir, build)
-    monkeypatch.setattr(br, "_commit_metadata", race_then_fail)
+        return real_commit(fs, jvm, table_dir, build, **kw)
+    monkeypatch.setattr(br, "_commit", race_then_fail)
     with pytest.raises(ValueError, match="not a fast-forward"):
         br.fast_forward(spark, t, "racy")
     # branch survived with its own file back in place

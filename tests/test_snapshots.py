@@ -2131,6 +2131,24 @@ _GATE_OPS = {
         lambda spark, tdir: sn.read_snapshot(spark, tdir, point={"k": 3}).collect(),
         2,
     ),
+    "delete_where": (
+        _gate_write,
+        lambda spark, tdir: sn.delete_where(spark, tdir, "i < 5"),
+        5,
+    ),
+    "merge_into_mor": (
+        _gate_write,
+        lambda spark, tdir: sn.merge_into_mor(
+            spark, tdir, _gate_table(spark).filter("i % 10 = 0"), ["i"]
+        ),
+        13,
+    ),
+    # selective compaction of the two small files _gate_write leaves
+    "optimize_snapshot_selective": (
+        _gate_write,
+        lambda spark, tdir: sn.optimize_snapshot(spark, tdir, min_file_mb=1),
+        3,
+    ),
 }
 
 
