@@ -60,6 +60,16 @@ breaks the all-files-bucketed property ``read_snapshot_bucketed`` relies
 on, so it refuses until an overwrite re-buckets. Merge-on-read deletes
 and constraint/spec commits touch no file and keep it.
 
+DML is one match step and two write strategies (the Delta / Iceberg v2
+split). ``_match`` finds the live rows of the candidate files, with
+their ``(__file, __pos)`` position, through each op's selection: a
+condition filter (delete, update), a semi-join (``delete_keys_mor``) or
+the null-safe key join (merge). Copy-on-write (``delete_where`` and
+``delete_range``, ``update_where``, ``merge_into``) rewrites the files
+the match hits; merge-on-read (``delete_where_mor``, ``delete_keys_mor``,
+``update_where_mor``, ``merge_into_mor``) writes the matched positions
+as one deletion-vector sidecar and appends the reinserted rows.
+
 Local-filesystem caveat (found by the concurrent-writer stress test,
 tests/test_snapshots.py): Hadoop's ChecksumFileSystem implements
 ``create(path, overwrite=False)`` as check-then-create — NOT atomic —
@@ -98,6 +108,8 @@ back to inference.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import functools
 import json
 import math
@@ -146,8 +158,6 @@ def _plain(v):
 
 
 def _is_num_bound(v) -> bool:
-    import decimal
-
     return isinstance(v, (int, float, decimal.Decimal)) and not isinstance(v, bool)
 
 
@@ -155,8 +165,6 @@ def _num(v):
     """Exact numeric form of a manifest-stored stat or caller bound, or
     None when it doesn't parse (Decimal avoids float rounding at the
     prune boundary — '9.5' vs '10.00' must compare numerically exact)."""
-    import decimal
-
     try:
         return decimal.Decimal(str(v))
     except (decimal.InvalidOperation, ValueError):
@@ -256,7 +264,7 @@ _PUBLISHED_MARKER = "_published.json"
 # (concurrent driver threads registering/cleaning groups — ADVICE r9);
 # the read_snapshot lookup is a single dict.get and needs no lock.
 _PINNED_GROUP_GUARD: dict[str, str] = {}
-_PINNED_GROUP_LOCK = __import__("threading").Lock()
+_PINNED_GROUP_LOCK = threading.Lock()
 
 
 def _pin_key(spark: SparkSession, table_dir: str) -> str:
@@ -471,6 +479,34 @@ def _find_idempotent(fs, jvm, table_dir: str, key: str, head: int) -> int | None
     return None
 
 
+def _head(
+    spark: SparkSession,
+    table_dir: str,
+    op: str | None = None,
+    version: int | None = None,
+    key: str | None = None,
+):
+    """``(fs, jvm, version, manifest)`` of ``version`` (default: head)
+    for every op that reads one version; refuses a retired branch, a
+    table with no snapshots and, for a DML ``op``, a column-mapped one.
+    An idempotency ``key`` already committed returns ``(fs, jvm, prior,
+    None)``: the caller replays that commit."""
+    fs, _, jvm = _fs(spark, table_dir)
+    _refuse_if_retired(fs, jvm, table_dir)
+    if version is None:
+        version = current_version_from_fs(fs, jvm, table_dir)
+    if version == 0:
+        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    if key is not None:
+        prior = _find_idempotent(fs, jvm, table_dir, key, version)
+        if prior is not None:
+            return fs, jvm, prior, None
+    manifest = _read_manifest(fs, jvm, table_dir, version)
+    if op is not None:
+        _refuse_mapping(manifest, op)
+    return fs, jvm, version, manifest
+
+
 def _schema_fields(schema_json: dict) -> dict:
     """name → type-json map for order-insensitive schema comparison."""
     return {f["name"]: f["type"] for f in schema_json.get("fields", [])}
@@ -523,16 +559,12 @@ def _commit(
 
     Returns ``(version, True)`` for a new commit, ``(prior, False)`` for
     a replay."""
-    Path = jvm.org.apache.hadoop.fs.Path
     head0, probed = probe or (None, {})
     gone = set(removed or ())
     vectored = vectored or {}
 
     def unstage():
-        for rel in new.files:
-            fs.delete(Path(f"{table_dir}/{rel}"), False)
-        if sidecar:
-            fs.delete(Path(f"{table_dir}/{sidecar}"), True)
+        _drop_paths(fs, jvm, table_dir, *new.files, sidecar)
 
     # bounded: losing the create race 100 times in a row means the
     # "conflict" is really a persistent error — permissions, bad path —
@@ -711,9 +743,7 @@ def write_snapshot(
         prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, head0)
         if prior is not None:
             return prior
-    head0_manifest = (
-        _read_manifest(fs, jvm, table_dir, head0) if head0 > 0 else {}
-    )
+    head0_manifest = _read_manifest(fs, jvm, table_dir, head0) if head0 else {}
     # CHECK-constraint validation (Delta semantics: a row violates when
     # the expression is FALSE; NULL passes). Validated against the head's
     # constraint set BEFORE any file lands in data/ — a violating commit
@@ -753,11 +783,7 @@ def write_snapshot(
     # bucket-layout resolution (Spark-native bucketing for shuffle-free
     # joins via read_snapshot_bucketed): appends inherit the table's
     # layout and refuse a conflicting one, like the partition spec
-    bb = (
-        {"col": str(bucket_by[0]), "n": int(bucket_by[1])}
-        if bucket_by is not None
-        else None
-    )
+    bb = {"col": str(bucket_by[0]), "n": int(bucket_by[1])} if bucket_by else None
     parent_bb = head0_manifest.get("bucket_by")
     if mode == "append" and parent_bb:
         if bb is None:
@@ -1036,17 +1062,11 @@ def read_snapshot(
                 "pass an explicit version=/as_of_ts= for a deliberate "
                 "time-travel read"
             )
-    fs, _, jvm = _fs(spark, table_dir)
-    _refuse_if_retired(fs, jvm, table_dir)
     if as_of_ts is not None:
         if version is not None:
             raise ValueError("pass either version or as_of_ts, not both")
         version = version_as_of(spark, table_dir, as_of_ts)
-    if version is None:
-        version = current_version(spark, table_dir)
-    if version == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, version)
+    _, _, version, manifest = _head(spark, table_dir, version=version)
     rels = manifest["files"]
     # column mapping: callers speak LOGICAL names; stats/bloom manifest
     # entries are keyed by the PHYSICAL names the files carry
@@ -1056,10 +1076,7 @@ def read_snapshot(
             prune = {cmap.get(c, c): b for c, b in prune.items()}
         if point:
             point = {cmap.get(c, c): v for c, v in point.items()}
-    kept = rels
-    if prune:
-        stats = manifest.get("stats", {})
-        kept = [rel for rel in rels if _overlaps(stats.get(rel), prune)]
+    kept = _pruned(manifest, rels, prune)
     if point:
         stats = manifest.get("stats", {})
         blooms = manifest.get("blooms", {})
@@ -1128,17 +1145,17 @@ def read_snapshot(
             .limit(0),
             manifest,
         )
-    if manifest.get("dvs") and not merge_schema:
+    if manifest.get("dvs"):
+        if merge_schema:
+            raise ValueError(
+                "read_snapshot(merge_schema=True) on a table with deletion "
+                "vectors is unsupported — run materialize_dvs() first"
+            )
         # merge-on-read: anti-join the deletion vectors at scan time
         # (files without a DV entry scan plain; fully-deleted files are
-        # never opened — see _read_with_dvs)
+        # never opened — see _match)
         return _apply_mapping(
             _read_with_dvs(spark, table_dir, manifest, kept), manifest
-        )
-    if manifest.get("dvs") and merge_schema:
-        raise ValueError(
-            "read_snapshot(merge_schema=True) on a table with deletion "
-            "vectors is unsupported — run materialize_dvs() first"
         )
     return _apply_mapping(
         _scan(spark, table_dir, manifest, kept, merge_schema), manifest
@@ -1175,15 +1192,13 @@ def read_snapshot_bucketed(
     module docstring. The cure is an overwrite with the same
     ``bucket_by``.
     """
-    fs, hpath, jvm = _fs(spark, table_dir)
-    uri = hpath.toUri()
+    uri = _fs(spark, table_dir)[1].toUri()
     if uri.getScheme() not in (None, "file"):
         raise ValueError(
             "read_snapshot_bucketed needs a local (file://) table — on "
             "HDFS/object stores use a DSv2 storage-partitioned join"
         )
-    head = version if version is not None else current_version(spark, table_dir)
-    man = _read_manifest(fs, jvm, table_dir, head)
+    _, _, head, man = _head(spark, table_dir, version=version)
     bb = man.get("bucket_by")
     if not bb:
         raise ValueError(
@@ -1255,8 +1270,7 @@ def read_changes(
     vacuumed away (silent gaps would corrupt downstream state).
     """
     fs, _, jvm = _fs(spark, table_dir)
-    if to_version is None:
-        to_version = current_version(spark, table_dir)
+    to_version = current_version(spark, table_dir) if to_version is None else to_version
     frames = []
     for v in range(from_version + 1, to_version + 1):
         man = _read_manifest(fs, jvm, table_dir, v)
@@ -1267,17 +1281,12 @@ def read_changes(
                     man,  # each version resolves its OWN logical names
                 ).withColumn("_commit_version", F.lit(v).cast("long"))
             )
-    if not frames:
+    if not frames:  # an explicit head version: no table still refuses
         head = current_version(spark, table_dir)
-        if head == 0:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         return read_snapshot(spark, table_dir, version=head).limit(0).withColumn(
             "_commit_version", F.lit(0).cast("long")
         )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def rollback(spark: SparkSession, table_dir: str, to_version: int) -> int:
@@ -1602,14 +1611,11 @@ def _point_hashes(
     hashes the physical type (an int literal and a bigint column hash
     differently), so every probe literal is cast to the column's
     manifest-recorded type before hashing. Atomic types only — a point
-    lookup on a struct/array column has no literal form here."""
+    lookup on a struct/array column has no literal form here
+    (``read_snapshot`` refuses one before probing)."""
     sel = []
     for c, v in point.items():
         t = types.get(c)
-        if t is not None and not isinstance(t, str):
-            raise ValueError(
-                f"point lookup on non-atomic column {c!r} (type {t!r}) unsupported"
-            )
         lit = F.lit(v) if t is None else F.lit(v).cast(t)
         for i in range(depth):
             sel.append(F.xxhash64(lit, F.lit(i)).alias(f"{c}__{i}"))
@@ -1704,21 +1710,16 @@ def optimize_snapshot(
         raise ValueError(
             "pass at most one of cluster_by / zorder_by / hilbert_by"
         )
-    fs, _, jvm = _fs(spark, table_dir)
+    fs, jvm, head, manifest = _head(spark, table_dir, "optimize_snapshot")
     Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, "optimize_snapshot")
     stats_cols = _stats_cols(manifest)
+    sizes = {
+        rel: fs.getFileStatus(Path(_data_path(table_dir, rel))).getLen()
+        for rel in manifest["files"]
+    }
 
     if min_file_mb is not None and not cluster_by and not zorder_by and not hilbert_by:
         dv_set = set(manifest.get("dvs", {}))
-        sizes = {
-            rel: fs.getFileStatus(Path(_data_path(table_dir, rel))).getLen()
-            for rel in manifest["files"]
-        }
         small = [
             r
             for r in manifest["files"]
@@ -1727,18 +1728,13 @@ def optimize_snapshot(
         if len(small) <= 1:
             return head  # nothing worth compacting
         n = max(1, math.ceil(sum(sizes[r] for r in small) / (target_mb * 1024 * 1024)))
-        tag = uuid.uuid4().hex[:12]
-        staging = f"{table_dir}/staging-{tag}"
-        small_df = _scan(spark, table_dir, manifest, small).coalesce(n)
         # a partitioned table's compaction regroups by the spec (the hive
         # split in staging restores one-value-per-file, so the recomputed
         # min==max stats keep partition pruning exact)
-        _stage_df(small_df, staging, manifest.get("partition_spec") or ())
-        staged = _move_staged(
-            fs, jvm, table_dir, staging, f"o{tag}",
-            _staged_meta(
-                spark, staging, small_df.schema, stats_cols, _bloom_specs(manifest)
-            ),
+        staged = _stage(
+            fs, jvm, table_dir, manifest,
+            _scan(spark, table_dir, manifest, small).coalesce(n), "o",
+            spec=manifest.get("partition_spec") or (),
         )
         # untouched files keep their stats, index and vectors verbatim;
         # compacted replacements get a FRESH bloom at the parent's dial. A
@@ -1753,11 +1749,7 @@ def optimize_snapshot(
             action="optimize",
         )[0]
 
-    total = sum(
-        fs.getFileStatus(Path(_data_path(table_dir, rel))).getLen()
-        for rel in manifest["files"]
-    )
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    n = max(1, math.ceil(sum(sizes.values()) / (target_mb * 1024 * 1024)))
     # read with the manifest's union schema, so an additively evolved
     # table keeps its later-added columns through the rewrite
     current = read_snapshot(spark, table_dir, version=head)
@@ -1935,25 +1927,17 @@ def _reap_before(
     # wall-clock grace: reap only files old enough that any writer which
     # staged them has had grace_seconds to finish its commit (ms clock)
     wall_cutoff = (time.time() - grace_seconds) * 1000.0
-    data_path = Path(f"{table_dir}/{_DATA}")
-    if fs.exists(data_path):
-        for st in fs.listStatus(data_path):
-            rel = f"{_DATA}/{st.getPath().getName()}"
-            if rel not in referenced and (
-                cutoff is None or st.getModificationTime() < cutoff
-            ) and st.getModificationTime() < wall_cutoff:
-                out["data_files"].append(rel)
-                if not dry_run:
-                    fs.delete(st.getPath(), False)
-    # deletion-vector sidecars referenced only by dropped versions go too
-    dv_path = Path(f"{table_dir}/{_DV}")
-    if fs.exists(dv_path):
-        for st in fs.listStatus(dv_path):
-            rel = f"{_DV}/{st.getPath().getName()}"
-            if rel not in referenced_dv and (
-                cutoff is None or st.getModificationTime() < cutoff
-            ) and st.getModificationTime() < wall_cutoff:
-                out["dv_files"].append(rel)
+    # data files and deletion-vector sidecars only dropped versions cite
+    for sub, kept, key in (
+        (_DATA, referenced, "data_files"), (_DV, referenced_dv, "dv_files")
+    ):
+        root = Path(f"{table_dir}/{sub}")
+        for st in fs.listStatus(root) if fs.exists(root) else ():
+            rel, mtime = f"{sub}/{st.getPath().getName()}", st.getModificationTime()
+            if rel not in kept and (cutoff is None or mtime < cutoff) and (
+                mtime < wall_cutoff
+            ):
+                out[key].append(rel)
                 if not dry_run:
                     fs.delete(st.getPath(), True)
     for v in range(1, keep_from):
@@ -2007,11 +1991,8 @@ def expire_snapshots(
     """
     head = current_version(spark, table_dir)
     empty = {
-        "expired_versions": [],
-        "data_files": [],
-        "dv_files": [],
-        "manifests": [],
-        "dry_run": dry_run,
+        "expired_versions": [], "data_files": [], "dv_files": [],
+        "manifests": [], "dry_run": dry_run,
     }
     if head == 0:
         return empty
@@ -2039,6 +2020,224 @@ def expire_snapshots(
     return res
 
 
+def _pruned(manifest: dict, rels, prune: dict | None) -> list[str]:
+    """``rels`` minus the files whose manifest stats provably miss
+    ``prune`` (``read_snapshot``'s contract)."""
+    stats = manifest.get("stats", {})
+    return [rel for rel in rels if not prune or _overlaps(stats.get(rel), prune)]
+
+
+def _match(
+    spark: SparkSession, table_dir: str, manifest: dict, rels, select=None
+) -> DataFrame:
+    """The DML match step (module docstring), also the deletion-vector
+    read: the live rows of ``rels`` with ``__file`` (file name) and
+    ``__pos`` (parquet row index, stable per file) attached, narrowed by
+    ``select(live)``; Catalyst prunes the scan to the columns used.
+    Fully-deleted files (DV count == row count) are never opened; files
+    carrying a DV are anti-joined against the sidecars, the rest take
+    the plain scan. No broadcast hint on the anti-join: at a high delete
+    rate the DV side is corpus-scale and would OOM the driver; AQE still
+    broadcasts it when it is actually small."""
+    dvs, rows = manifest.get("dvs", {}), manifest.get("rows", {})
+    live = [rel for rel in rels if rel not in dvs or rows.get(rel) is None
+            or int(dvs[rel]) < int(rows[rel])]
+
+    def scan(part):
+        return _scan(spark, table_dir, manifest, part).select(
+            "*",
+            F.col("_metadata.file_name").alias("__file"),
+            F.col("_metadata.row_index").alias("__pos"),
+        )
+
+    vectored = [rel for rel in live if rel in dvs]
+    plain = [rel for rel in live if rel not in dvs]
+    parts = [scan(plain)] if plain else []
+    if vectored:
+        dv = _dv_frame(spark, table_dir, manifest)
+        parts.insert(0, scan(vectored).join(dv, ["__file", "__pos"], "left_anti"))
+    if not parts:
+        parts = [scan(rels[:1] or manifest["files"][:1]).limit(0)]
+    out = functools.reduce(DataFrame.unionByName, parts)
+    return select(out) if select else out
+
+
+def _hits(match: DataFrame, rels, *aggs) -> dict:
+    """``{rel: row}`` for the files of ``rels`` a match hits, in ``rels``
+    order, from one grouped collect (metadata-scale): ``row["n"]``
+    counts the matched rows, ``aggs`` add columns."""
+    per_file = match.groupBy("__file").agg(F.count(F.lit(1)).alias("n"), *aggs)
+    got = {r["__file"]: r for r in per_file.collect()}
+    names = {rel: rel.rsplit("/", 1)[-1] for rel in rels}
+    return {rel: got[name] for rel, name in names.items() if name in got}
+
+
+def _vector(fs, jvm, table_dir: str, match: DataFrame, rels):
+    """The MOR write step: the match's positions as ONE sidecar under
+    ``dv/``, counted per file of ``rels``. Returns ``(sidecar, {rel:
+    rows})``, or ``(None, {})`` and no sidecar when nothing matched."""
+    sidecar = f"{_DV}/v{uuid.uuid4().hex[:12]}"
+    path = f"{table_dir}/{sidecar}"
+    match.select("__file", "__pos").write.parquet(path)
+    written = match.sparkSession.read.schema(_DV_SCHEMA).parquet(path)
+    counts = {rel: r["n"] for rel, r in _hits(written, rels).items()}
+    if not counts:
+        _drop_paths(fs, jvm, table_dir, sidecar)
+        return None, {}
+    return sidecar, counts
+
+
+def _drop_paths(fs, jvm, table_dir: str, *rels) -> None:
+    """Delete staged paths (relative to ``table_dir``; None skipped)."""
+    for rel in rels:
+        if rel:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{rel}"), True)
+
+
+def _stage(
+    fs, jvm, table_dir: str, manifest: dict, df: DataFrame, prefix: str,
+    what: str | None = None, sidecar: str | None = None, spec=(),
+) -> _Staged:
+    """Stage ``df`` (hive-split by ``spec``), CHECK-validate it when
+    ``what`` names the refusal (removing the staging dir and the op's
+    ``sidecar`` first), collect stats/blooms at the head's columns and
+    dials, and move it under ``data/`` as ``{prefix}{tag}-…``."""
+    spark = df.sparkSession
+    tag = uuid.uuid4().hex[:12]
+    staging = f"{table_dir}/staging-{tag}"
+    _stage_df(df, staging, spec)
+    if what:
+        _check_constraints(
+            spark, staging, df.schema, manifest.get("constraints", {}), what,
+            lambda: _drop_paths(fs, jvm, table_dir, f"staging-{tag}", sidecar),
+        )
+    return _move_staged(
+        fs, jvm, table_dir, staging, f"{prefix}{tag}",
+        _staged_meta(
+            spark, staging, df.schema, _stats_cols(manifest), _bloom_specs(manifest)
+        ),
+    )
+
+
+def _set_projection(manifest: dict, table_dir: str, assignments: dict[str, str]):
+    """UPDATE's SET, checked against the manifest schema before any scan.
+    Returns ``project(df, cond=None)``: ``df``'s data columns with each
+    target replaced by its expression over the OLD row, cast to the
+    column's type (where ``cond`` holds, when given)."""
+    if not assignments:
+        raise ValueError("UPDATE requires at least one SET assignment")
+
+    def check(cols):
+        unknown = sorted(set(assignments) - set(cols))
+        if unknown:
+            raise ValueError(
+                f"UPDATE SET targets {unknown} do not exist in {table_dir} — "
+                "UPDATE never adds columns (append with schema evolution instead)"
+            )
+
+    if manifest.get("schema"):
+        check(_schema_fields(manifest["schema"]))
+
+    def project(df: DataFrame, cond=None) -> DataFrame:
+        data = [f for f in df.schema.fields if f.name not in ("__file", "__pos")]
+        check(f.name for f in data)  # also covers schema-less manifests
+
+        def value(f):
+            new = F.expr(assignments[f.name]).cast(f.dataType)
+            return new if cond is None else F.when(cond, new).otherwise(F.col(f.name))
+
+        return df.select(
+            *[value(f).alias(f.name) if f.name in assignments else F.col(f.name)
+              for f in data]
+        )
+
+    return project
+
+
+def _merge_source(
+    spark: SparkSession, table_dir: str, manifest: dict, source: DataFrame,
+    keys: list[str], delete_condition: str | None, op: str,
+):
+    """MERGE's source side, checked before the target is touched: without
+    a ``delete_condition`` the source must match the table schema
+    exactly, with one it may carry extra columns (condition fuel only).
+    NULL merge keys refuse (Delta's stance): the match and rewrite joins
+    are null-safe ``<=>`` while the NOT-MATCHED anti-join uses plain
+    equality, so a NULL-key source row against a NULL-key target row
+    would update the target IN PLACE and insert a duplicate. A key held
+    by >1 source row has no well-defined update and refuses as
+    ambiguous.
+
+    Returns ``(join, inserts, merged)``. ``join(target, how)`` joins
+    target rows ``t`` to the source ``s`` on null-safe key equality; the
+    source carries its ``__del`` flag (``delete_condition`` true, NULL is
+    not deleted). ``inserts`` are the NOT-MATCHED source rows (a
+    delete-flagged one never inserts: absent-key delete is a no-op).
+    ``merged(joined)`` is what a join writes: matched rows take every
+    source column (a NULL source value still wins, MERGE's UPDATE SET
+    t.c=s.c), delete-flagged matches drop, unmatched rows stay."""
+    tcols = [f["name"] for f in manifest.get("schema", {}).get("fields", [])]
+    if tcols and delete_condition is None and source.columns != tcols:
+        missing = set(tcols) ^ set(source.columns)
+        raise ValueError(
+            f"{op} requires the source to match the table schema "
+            f"{tcols}; differ on {sorted(missing) or 'column order'}"
+        )
+    if tcols and not set(tcols) <= set(source.columns):
+        raise ValueError(
+            f"{op} source is missing table columns "
+            f"{sorted(set(tcols) - set(source.columns))}"
+        )
+    out_cols = tcols or list(source.columns)
+    src = source.withColumn(
+        "__del",
+        F.coalesce(F.expr(delete_condition), F.lit(False))
+        if delete_condition is not None
+        else F.lit(False),
+    )
+    null_key = functools.reduce(lambda a, b: a | b, (F.col(k).isNull() for k in keys))
+    if source.filter(null_key).limit(1).collect():  # key-pruned limit-1 scans
+        raise ValueError(
+            f"{op} source has NULL value(s) in merge key column(s) {keys} — "
+            "NULL merge keys are refused (they never equi-match, so the row "
+            "could both update a NULL-key target row and insert a duplicate); "
+            "filter or impute the key column first"
+        )
+    dup = (
+        source.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            f"{op} source has multiple rows for key "
+            f"{tuple(dup[0][k] for k in keys)} — ambiguous MERGE refused"
+        )
+    live = _match(spark, table_dir, manifest, manifest["files"])
+    inserts = src.filter(~F.col("__del")).join(
+        live.select(*keys), on=keys, how="left_anti"
+    ).select(*out_cols)
+
+    def join(target: DataFrame, how: str = "inner") -> DataFrame:
+        on = F.expr(" AND ".join(f"t.{k} <=> s.{k}" for k in keys))
+        return target.alias("t").join(src.alias("s"), on=on, how=how)
+
+    def merged(joined: DataFrame) -> DataFrame:
+        hit = F.col(f"s.{keys[0]}").isNotNull()  # source keys are non-NULL
+        return joined.filter(~(hit & F.col("s.__del"))).select(
+            *[F.col(f"t.{k}").alias(k) for k in keys],
+            *[
+                F.when(hit, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+                for c in out_cols
+                if c not in keys
+            ],
+        ).select(*out_cols)
+
+    return join, inserts, merged
+
+
 def delete_where(
     spark: SparkSession,
     table_dir: str,
@@ -2058,9 +2257,9 @@ def delete_where(
     1. ``prune={"col": (lo, hi)}`` — manifest-stats file skipping (same
        contract as ``read_snapshot``): files provably outside the range
        are not even SCANNED for matches.
-    2. a distributed match probe — one filtered aggregate grouped by
-       ``input_file_name()`` over the candidate files — finds which
-       files truly contain matches; scan-only candidates are kept as-is.
+    2. a distributed match probe — one filtered aggregate per data
+       file over the candidate files (``_match``) — finds which files
+       truly contain matches; scan-only candidates are kept as-is.
 
     The rewrite reads only the hit files and writes survivors; per-file
     min/max stats are recomputed for the columns the parent manifest
@@ -2086,107 +2285,52 @@ def delete_where(
     no-match call commits nothing and returns the current version with
     zero counts.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
+    fs, jvm, head, manifest = _head(spark, table_dir, "delete_where")
     all_files = manifest["files"]
-    stats = manifest.get("stats", {})
-
-    drop = [rel for rel in (_drop or []) if rel in set(all_files)]
-    dropped_rows = sum(
-        int(manifest.get("rows", {}).get(rel, 0)) for rel in drop
+    dropped = set(_drop or ()) & set(all_files)
+    drop = [rel for rel in all_files if rel in dropped]
+    candidates = _pruned(
+        manifest, [rel for rel in all_files if rel not in dropped], prune
     )
-    candidates = [rel for rel in all_files if rel not in set(drop)]
-    if prune:
-        candidates = [rel for rel in candidates if _overlaps(stats.get(rel), prune)]
     _refuse_dvs(manifest, candidates + drop, "delete_where")
-    _refuse_mapping(manifest, "delete_where")
-    skipped_by_stats = len(all_files) - len(candidates) - len(drop)
-
-    def _result(version, deleted=0, rewritten=0):
-        committed = version != head
-        return {
-            "version": version,
-            "rows_deleted": deleted,
-            "files_rewritten": rewritten,
-            "files_dropped": len(drop) if committed else 0,
-            "files_untouched": len(all_files)
-            - rewritten
-            - (len(drop) if committed else 0),
-            "files_skipped_by_stats": skipped_by_stats,
-        }
-
-    if not candidates and not drop:
-        return _result(head)
-
     cond = F.expr(condition)
-    hit_files: list[str] = []
-    rows_deleted = 0
-    if candidates:
-        cand_df = _scan(spark, table_dir, manifest, candidates)
-        probe = (
-            cand_df.filter(cond)
-            .groupBy(F.input_file_name().alias("__file"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )  # metadata-scale: one row per file containing matches
-        hit_names = {r["__file"].rsplit("/", 1)[-1]: r["n"] for r in probe}
-        hit_files = [
-            rel for rel in candidates if rel.rsplit("/", 1)[-1] in hit_names
-        ]
-        rows_deleted = sum(hit_names.values())
-    if not hit_files and not drop:
-        return _result(head)
-    rows_deleted += dropped_rows
-
-    # rewrite survivors of the hit files only; NULL condition rows kept
-    tag = uuid.uuid4().hex[:12]
-    # staging dir name is NOT dot-prefixed: Spark reads a hidden-named
-    # root only via ambiguous base-path fallback (and WARNs "All paths
-    # were ignored"); nothing ever lists the table root, so visibility
-    # costs nothing and the stats read is on defined behavior
-    staging = f"{table_dir}/staging-{tag}"
-    meta: tuple[dict, dict, dict] = ({}, {}, {})
-    if hit_files:
-        # the manifest's union schema: the hit set can span an additive
-        # schema-evolution boundary, and older files rewrite with typed
-        # NULLs for the later-added columns
-        survivors = _scan(
-            spark, table_dir, manifest, hit_files, merge_schema=True
-        ).filter(~cond | cond.isNull())
-        survivors.write.parquet(staging)
-        meta = _staged_meta(
-            spark, staging, survivors.schema, _stats_cols(manifest),
-            _bloom_specs(manifest),
+    hits = _hits(
+        _match(spark, table_dir, manifest, candidates, lambda t: t.filter(cond)),
+        candidates,
+    ) if candidates else {}
+    version, rows_deleted = head, 0
+    if hits or drop:
+        rows_deleted = sum(r["n"] for r in hits.values()) + sum(
+            int(manifest.get("rows", {}).get(rel, 0)) for rel in drop
         )
-    else:
-        fs.mkdirs(Path(staging))  # drop-only delete: nothing to rewrite
-    staged = _move_staged(fs, jvm, table_dir, staging, f"d{tag}", meta)
-    # survivors are a subset of rows that already satisfied every
-    # row-level CHECK, so the constraint set carries without
-    # re-validation; untouched files keep their stats, index and vectors
-    # (hit files are DV-free: _refuse_dvs at probe time, and the commit
-    # refuses one vectored since — the staged survivors would resurrect
-    # its deleted rows)
-    version = _commit(
-        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
-        removed=hit_files + drop,
-        conflict="concurrent commit touched files this DELETE rewrote "
-        "({table_dir} v{cur}); rerun the delete against the new head",
-        action="delete", condition=condition, rows_deleted=rows_deleted,
-    )[0]
-    return _result(version, rows_deleted, len(hit_files))
+        # COW: rewrite the hit files' survivors (NULL-condition rows
+        # kept) with the manifest's union schema, so hit files older than
+        # an additive evolution rewrite with typed NULLs. Survivors
+        # already satisfied every CHECK: no re-validation. Hit files are
+        # DV-free (_refuse_dvs), and the commit refuses one vectored since
+        # (the staged survivors would resurrect its deleted rows)
+        staged = _stage(
+            fs, jvm, table_dir, manifest,
+            _scan(spark, table_dir, manifest, list(hits), merge_schema=True)
+            .filter(~cond | cond.isNull()), "d",
+        ) if hits else _NO_FILES
+        version = _commit(
+            fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+            removed=list(hits) + drop,
+            conflict="concurrent commit touched files this DELETE rewrote "
+            "({table_dir} v{cur}); rerun the delete against the new head",
+            action="delete", condition=condition, rows_deleted=rows_deleted,
+        )[0]
+    return {
+        "version": version, "rows_deleted": rows_deleted,
+        "files_rewritten": len(hits), "files_dropped": len(drop),
+        "files_untouched": len(all_files) - len(hits) - len(drop),
+        "files_skipped_by_stats": len(all_files) - len(candidates) - len(drop),
+    }
 
 
 def _sql_lit(v) -> str:
     """SQL literal for a Python range bound (int/float/str/date/ts)."""
-    import datetime
-
-    import decimal
-
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
@@ -2237,22 +2381,15 @@ def delete_range(
     commit touched a hit or dropped file). Returns ``delete_where``'s
     dict — ``files_dropped`` counts the zero-I/O tier.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, "delete_range")
-    rows = manifest.get("rows", {})
-    stats = manifest.get("stats", {})
+    _, _, _, manifest = _head(spark, table_dir, "delete_range")
+    rows, stats = manifest.get("rows", {}), manifest.get("stats", {})
     drop = []
     for rel in manifest["files"]:
-        rng = stats.get(rel, {}).get(col)
-        n = rows.get(rel)
-        if rng and n and len(rng) > 2 and int(rng[2]) == int(n):
-            _, covered = _stats_vs_bounds(rng[0], rng[1], lo, hi)
-            if covered:
-                drop.append(rel)
+        rng, n = stats.get(rel, {}).get(col), rows.get(rel)
+        if rng and n and len(rng) > 2 and int(rng[2]) == int(n) and (
+            _stats_vs_bounds(rng[0], rng[1], lo, hi)[1]  # covered
+        ):
+            drop.append(rel)
     return delete_where(
         spark,
         table_dir,
@@ -2286,7 +2423,7 @@ def update_where(
 
     Cost shape (the 100 TB contract): manifest-stats pruning
     (``prune={"col": (lo, hi)}``) drops provably-unmatching files
-    unread, a distributed ``input_file_name()`` probe finds which
+    unread, a distributed per-file match probe finds which
     remaining files truly contain matches, and ONLY those are rewritten
     — every other file is carried into the new version with zero I/O.
     Rewritten files get fresh min/max/non-null stats and Bloom entries
@@ -2311,111 +2448,56 @@ def update_where(
     "files_untouched", "files_skipped_by_stats"}``; a no-match call
     commits nothing and returns the current version with zero counts.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not assignments:
-        raise ValueError("UPDATE requires at least one SET assignment")
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
+    fs, jvm, head, manifest = _head(spark, table_dir, "update_where")
+    project = _set_projection(manifest, table_dir, assignments)
     all_files = manifest["files"]
-    stats = manifest.get("stats", {})
-
-    candidates = all_files
-    if prune:
-        candidates = [rel for rel in all_files if _overlaps(stats.get(rel), prune)]
+    candidates = _pruned(manifest, all_files, prune)
     _refuse_dvs(manifest, candidates, "update_where")
-    _refuse_mapping(manifest, "update_where")
-    skipped_by_stats = len(all_files) - len(candidates)
-
-    def _result(version, updated=0, rewritten=0):
-        return {
-            "version": version,
-            "rows_updated": updated,
-            "files_rewritten": rewritten,
-            "files_untouched": len(all_files) - rewritten,
-            "files_skipped_by_stats": skipped_by_stats,
-        }
-
-    if not candidates:
-        return _result(head)
-
     cond = F.expr(condition)
-    cand_df = _scan(spark, table_dir, manifest, candidates)
-    unknown = sorted(set(assignments) - set(cand_df.columns))
-    if unknown:
-        raise ValueError(
-            f"UPDATE SET targets {unknown} do not exist in {table_dir} — "
-            "UPDATE never adds columns (append with schema evolution instead)"
+    hits = _hits(
+        _match(spark, table_dir, manifest, candidates, lambda t: t.filter(cond)),
+        candidates,
+    ) if candidates else {}
+    version, rows_updated = head, sum(r["n"] for r in hits.values())
+    if hits:
+        # COW: rewrite ONLY the hit files, with the manifest's union
+        # schema (delete_where's schema-evolution hazard); FALSE and
+        # NULL-condition rows pass through unchanged
+        staged = _stage(
+            fs, jvm, table_dir, manifest,
+            project(
+                _scan(spark, table_dir, manifest, list(hits), merge_schema=True),
+                cond,
+            ),
+            "u", "updated row(s) — UPDATE refused",
         )
-    probe = (
-        cand_df.filter(cond)
-        .groupBy(F.input_file_name().alias("__file"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )  # metadata-scale: one row per file containing matches
-    hit_names = {r["__file"].rsplit("/", 1)[-1]: r["n"] for r in probe}
-    hit_files = [rel for rel in candidates if rel.rsplit("/", 1)[-1] in hit_names]
-    rows_updated = sum(hit_names.values())
-    if not hit_files:
-        return _result(head)
-
-    # rewrite ONLY the hit files; SET expressions see the OLD row (one
-    # select evaluates every assignment against the input), non-matching
-    # and NULL-condition rows pass through the otherwise() branch
-    # the manifest's union schema: same schema-evolution hazard as
-    # delete_where's survivor read — the hit set may span an additive
-    # boundary
-    hit_df = _scan(spark, table_dir, manifest, hit_files, merge_schema=True)
-    projected = [
-        (
-            F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
-            .otherwise(F.col(f.name))
-            .alias(f.name)
-            if f.name in assignments
-            else F.col(f.name)
+        staged_total = sum(staged.rows.values())
+        hit_rows_before = sum(
+            int(manifest.get("rows", {}).get(rel, 0)) for rel in hits
         )
-        for f in hit_df.schema.fields
-    ]
-    tag = uuid.uuid4().hex[:12]
-    staging = f"{table_dir}/staging-{tag}"
-    updated = hit_df.select(*projected)
-    updated.write.parquet(staging)
-
-    constraints = manifest.get("constraints", {})
-    _check_constraints(
-        spark, staging, updated.schema, constraints,
-        "updated row(s) — UPDATE refused", lambda: fs.delete(Path(staging), True),
-    )
-
-    meta = _staged_meta(
-        spark, staging, updated.schema, _stats_cols(manifest), _bloom_specs(manifest)
-    )
-    staged_total = sum(meta[1].values())
-    hit_rows_before = sum(
-        int(manifest.get("rows", {}).get(rel, 0)) for rel in hit_files
-    )
-    if manifest.get("rows") and staged_total != hit_rows_before:
-        fs.delete(Path(staging), True)
-        raise RuntimeError(
-            f"UPDATE cardinality tripwire: rewrote {staged_total} "
-            f"rows from {hit_rows_before} — an assignment expression changed "
-            "row counts, refusing to commit"
-        )
-    # hit files are DV-free (_refuse_dvs at probe time); the commit
-    # refuses one vectored since (the staged rewrite would resurrect it)
-    version = _commit(
-        fs, jvm, table_dir, _unbucketed, probe=(head, manifest),
-        new=_move_staged(fs, jvm, table_dir, staging, f"u{tag}", meta),
-        removed=hit_files,
-        conflict="concurrent commit touched files this UPDATE rewrote "
-        "({table_dir} v{cur}); rerun the update against the new head",
-        validated=constraints, redo="update",
-        action="update", condition=condition,
-        set=dict(sorted(assignments.items())), rows_updated=rows_updated,
-    )[0]
-    return _result(version, rows_updated, len(hit_files))
+        if manifest.get("rows") and staged_total != hit_rows_before:
+            _drop_paths(fs, jvm, table_dir, *staged.files)
+            raise RuntimeError(
+                f"UPDATE cardinality tripwire: rewrote {staged_total} "
+                f"rows from {hit_rows_before} — an assignment expression changed "
+                "row counts, refusing to commit"
+            )
+        # hit files are DV-free (_refuse_dvs at probe time); the commit
+        # refuses one vectored since (the staged rewrite would resurrect it)
+        version = _commit(
+            fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+            removed=list(hits),
+            conflict="concurrent commit touched files this UPDATE rewrote "
+            "({table_dir} v{cur}); rerun the update against the new head",
+            validated=manifest.get("constraints", {}), redo="update",
+            action="update", condition=condition,
+            set=dict(sorted(assignments.items())), rows_updated=rows_updated,
+        )[0]
+    return {
+        "version": version, "rows_updated": rows_updated,
+        "files_rewritten": len(hits), "files_untouched": len(all_files) - len(hits),
+        "files_skipped_by_stats": len(all_files) - len(candidates),
+    }
 
 
 def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
@@ -2434,43 +2516,9 @@ def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
 
 
 def _read_with_dvs(spark: SparkSession, table_dir: str, manifest: dict, rels):
-    """Scan ``rels`` with the manifest's deletion vectors applied: rows
-    whose (file_name, row_index) appear in a sidecar are anti-joined
-    away. Files without a DV entry take the plain scan; fully-deleted
-    files (DV count == row count) are never opened. No broadcast hint on
-    the anti-join — at a high delete rate the DV side is corpus-scale
-    and would OOM the driver; AQE still picks broadcast when it is
-    actually small."""
-    dvs = manifest.get("dvs", {})
-    rows = manifest.get("rows", {})
-    live = [
-        rel
-        for rel in rels
-        if not (rel in dvs and rows.get(rel) is not None
-                and int(dvs[rel]) >= int(rows[rel]))
-    ]
-    dv_rels = [rel for rel in live if rel in dvs]
-    plain = [rel for rel in live if rel not in dvs]
-    parts = []
-    if dv_rels:
-        dv = _dv_frame(spark, table_dir, manifest)
-        base = _scan(spark, table_dir, manifest, dv_rels)
-        cols = base.columns
-        parts.append(
-            base.withColumn("__file", F.col("_metadata.file_name"))
-            .withColumn("__pos", F.col("_metadata.row_index"))
-            .join(dv, ["__file", "__pos"], "left_anti")
-            .select(*cols)
-        )
-    if plain:
-        parts.append(_scan(spark, table_dir, manifest, plain))
-    if not parts:
-        src = rels[0] if rels else manifest["files"][0]
-        return _scan(spark, table_dir, manifest, [src]).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """Scan ``rels`` with the manifest's deletion vectors applied: the
+    live rows ``_match`` finds, without their positions."""
+    return _match(spark, table_dir, manifest, rels).drop("__file", "__pos")
 
 
 def _refuse_dvs(manifest: dict, rels, op: str) -> None:
@@ -2531,25 +2579,6 @@ def _refuse_mapping(manifest: dict, op: str) -> None:
         )
 
 
-def _refuse_null_merge_keys(source: DataFrame, keys: list[str], op: str) -> None:
-    """MERGE joins would mix semantics on NULL merge keys: the matched-file
-    probe and the NOT-MATCHED anti-join use plain equality (NULL never
-    matches) while the rewrite/vector join is null-safe ``<=>`` — a NULL-key
-    source row against a NULL-key target row would update the target IN
-    PLACE and insert the source as a duplicate. Delta's stance: merge keys
-    must be non-NULL. One key-pruned limit-1 scan of the (small) source."""
-    null_pred = functools.reduce(
-        lambda a, b: a | b, (F.col(k).isNull() for k in keys)
-    )
-    if source.filter(null_pred).limit(1).collect():
-        raise ValueError(
-            f"{op} source has NULL value(s) in merge key column(s) {keys} — "
-            "NULL merge keys are refused (they never equi-match, so the row "
-            "could both update a NULL-key target row and insert a duplicate); "
-            "filter or impute the key column first"
-        )
-
-
 def delete_where_mor(
     spark: SparkSession,
     table_dir: str,
@@ -2595,87 +2624,43 @@ def delete_where_mor(
     """
     return _mor_delete(
         spark, table_dir, lambda live: live.filter(F.expr(condition)),
-        condition, prune,
+        condition, prune, "delete_where_mor",
     )
 
 
 def _mor_delete(
     spark: SparkSession,
     table_dir: str,
-    select_matches,
+    select,
     condition_desc: str,
-    prune: dict | None = None,
-    op_name: str = "delete_where_mor",
+    prune: dict | None,
+    op: str,
 ) -> dict:
-    """Shared merge-on-read DELETE machinery: ``select_matches(live)``
-    narrows the live-row frame (existing DVs already excluded, data
-    columns plus __file/__pos present) to the rows to vector out; the
-    sidecar write, per-file count probe, and optimistic commit follow
-    ``delete_where_mor``'s documented contract."""
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, op_name)
+    """``delete_where_mor``'s contract; ``select(live)`` picks the rows."""
+    fs, jvm, head, manifest = _head(spark, table_dir, op)
     all_files = manifest["files"]
-    stats = manifest.get("stats", {})
-
-    candidates = all_files
-    if prune:
-        candidates = [rel for rel in all_files if _overlaps(stats.get(rel), prune)]
-    skipped_by_stats = len(all_files) - len(candidates)
-
-    def _result(version, deleted=0, hit=0):
-        return {
-            "version": version,
-            "rows_deleted": deleted,
-            "files_with_dvs": hit,
-            "files_rewritten": 0,
-            "files_skipped_by_stats": skipped_by_stats,
-        }
-
-    if not candidates:
-        return _result(head)
-
-    # probe: matching live positions (already-deleted rows excluded so a
-    # re-run or overlapping condition never double-counts)
-    live = (
-        _scan(spark, table_dir, manifest, candidates)
-        .withColumn("__file", F.col("_metadata.file_name"))
-        .withColumn("__pos", F.col("_metadata.row_index"))
-    )
-    dv = _dv_frame(spark, table_dir, manifest)
-    if dv is not None:
-        live = live.join(dv, ["__file", "__pos"], "left_anti")
-    matches = select_matches(live).select("__file", "__pos")
-
-    tag = uuid.uuid4().hex[:12]
-    dv_rel = f"{_DV}/v{tag}"
-    matches.write.parquet(f"{table_dir}/{dv_rel}")
-    per_file = {
-        r["__file"]: int(r["n"])
-        for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
-        .groupBy("__file")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }  # metadata-scale: one row per affected file
-    if not per_file:
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-        return _result(head)
-    by_name = {rel.rsplit("/", 1)[-1]: rel for rel in candidates}
-    new_counts = {by_name[name]: n for name, n in per_file.items()}
-    rows_deleted = sum(new_counts.values())
-
-    version = _commit(
-        fs, jvm, table_dir, probe=(head, manifest), removed=(),
-        vectored=new_counts, sidecar=dv_rel,
-        conflict="concurrent commit touched {rel} after this MOR delete "
-        "probed it ({table_dir} v{cur}); rerun against the new head",
-        action="mor_delete", condition=condition_desc, rows_deleted=rows_deleted,
-    )[0]
-    return _result(version, rows_deleted, len(new_counts))
+    candidates = _pruned(manifest, all_files, prune)
+    version, counts = head, {}
+    if candidates:
+        sidecar, counts = _vector(
+            fs, jvm, table_dir,
+            _match(spark, table_dir, manifest, candidates, select), candidates,
+        )
+    rows_deleted = sum(counts.values())
+    if counts:
+        version = _commit(
+            fs, jvm, table_dir, probe=(head, manifest), removed=(),
+            vectored=counts, sidecar=sidecar,
+            conflict="concurrent commit touched {rel} after this MOR delete "
+            "probed it ({table_dir} v{cur}); rerun against the new head",
+            action="mor_delete", condition=condition_desc,
+            rows_deleted=rows_deleted,
+        )[0]
+    return {
+        "version": version, "rows_deleted": rows_deleted,
+        "files_with_dvs": len(counts), "files_rewritten": 0,
+        "files_skipped_by_stats": len(all_files) - len(candidates),
+    }
 
 
 def delete_keys_mor(
@@ -2713,7 +2698,7 @@ def delete_keys_mor(
         lambda live: live.join(keyed, on=key_col, how="left_semi"),
         f"{key_col} IN (<keys frame>)",
         prune,
-        op_name="delete_keys_mor",
+        "delete_keys_mor",
     )
 
 
@@ -2754,118 +2739,51 @@ def update_where_mor(
     "files_with_dvs", "files_added", "files_rewritten" (always 0),
     "files_skipped_by_stats"}``.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not assignments:
-        raise ValueError("UPDATE requires at least one SET assignment")
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, "update_where_mor")
+    fs, jvm, head, manifest = _head(spark, table_dir, "update_where_mor")
+    project = _set_projection(manifest, table_dir, assignments)
     all_files = manifest["files"]
-    stats = manifest.get("stats", {})
-
-    candidates = all_files
-    if prune:
-        candidates = [rel for rel in all_files if _overlaps(stats.get(rel), prune)]
-    skipped_by_stats = len(all_files) - len(candidates)
-
-    def _result(version, updated=0, hit=0, added=0):
-        return {
-            "version": version,
-            "rows_updated": updated,
-            "files_with_dvs": hit,
-            "files_added": added,
-            "files_rewritten": 0,
-            "files_skipped_by_stats": skipped_by_stats,
-        }
-
-    if not candidates:
-        return _result(head)
-
-    cond = F.expr(condition)
-    base = (
-        _scan(spark, table_dir, manifest, candidates)
-        .withColumn("__file", F.col("_metadata.file_name"))
-        .withColumn("__pos", F.col("_metadata.row_index"))
-    )
-    data_cols = [c for c in base.columns if c not in ("__file", "__pos")]
-    unknown = sorted(set(assignments) - set(data_cols))
-    if unknown:
-        raise ValueError(
-            f"UPDATE SET targets {unknown} do not exist in {table_dir} — "
-            "UPDATE never adds columns (append with schema evolution instead)"
-        )
-    dv = _dv_frame(spark, table_dir, manifest)
-    if dv is not None:
-        base = base.join(dv, ["__file", "__pos"], "left_anti")
-    matched = base.filter(cond).persist()
-    try:
-        tag = uuid.uuid4().hex[:12]
-        dv_rel = f"{_DV}/v{tag}"
-        matched.select("__file", "__pos").write.parquet(f"{table_dir}/{dv_rel}")
-        per_file = {
-            r["__file"]: int(r["n"])
-            for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
-            .groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }  # metadata-scale: one row per affected file
-        if not per_file:
-            fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-            return _result(head)
-        types = {f.name: f.dataType for f in matched.schema.fields}
-        updated = matched.select(
-            *[
-                (
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(c)
+    candidates = _pruned(manifest, all_files, prune)
+    version, counts, staged = head, {}, _NO_FILES
+    if candidates:
+        cond = F.expr(condition)
+        matched = _match(
+            spark, table_dir, manifest, candidates, lambda t: t.filter(cond)
+        ).persist()
+        try:
+            updated = project(matched)
+            sidecar, counts = _vector(fs, jvm, table_dir, matched, candidates)
+            if counts:
+                staged = _stage(
+                    fs, jvm, table_dir, manifest, updated, "w",
+                    "updated row(s) — UPDATE refused", sidecar,
                 )
-                for c in data_cols
-            ]
-        )
-        staging = f"{table_dir}/staging-{tag}"
-        updated.write.parquet(staging)
-    finally:
-        matched.unpersist()
-
-    def _unstage():
-        fs.delete(Path(staging), True)
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-
-    constraints = manifest.get("constraints", {})
-    _check_constraints(
-        spark, staging, updated.schema, constraints,
-        "updated row(s) — UPDATE refused", _unstage,
-    )
-
-    meta = _staged_meta(
-        spark, staging, updated.schema, _stats_cols(manifest), _bloom_specs(manifest)
-    )
-    by_name = {rel.rsplit("/", 1)[-1]: rel for rel in candidates}
-    new_counts = {by_name[name]: n for name, n in per_file.items()}
-    rows_updated = sum(new_counts.values())
-    staged_total = sum(meta[1].values())
-    if staged_total != rows_updated:
-        _unstage()
-        raise RuntimeError(
-            f"UPDATE cardinality tripwire: reinserted "
-            f"{staged_total} rows for {rows_updated} vectored — "
-            "an assignment expression changed row counts, refusing to commit"
-        )
-    staged = _move_staged(fs, jvm, table_dir, staging, f"w{tag}", meta)
-    version = _commit(
-        fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
-        removed=(), vectored=new_counts, sidecar=dv_rel,
-        conflict="concurrent commit touched {rel} after this MOR update "
-        "probed it ({table_dir} v{cur}); rerun against the new head",
-        validated=constraints, redo="update",
-        action="mor_update", condition=condition,
-        set=dict(sorted(assignments.items())), rows_updated=rows_updated,
-    )[0]
-    return _result(version, rows_updated, len(new_counts), len(staged.files))
+        finally:
+            matched.unpersist()
+    rows_updated = sum(counts.values())
+    if counts:
+        staged_total = sum(staged.rows.values())
+        if staged_total != rows_updated:
+            _drop_paths(fs, jvm, table_dir, *staged.files, sidecar)
+            raise RuntimeError(
+                f"UPDATE cardinality tripwire: reinserted "
+                f"{staged_total} rows for {rows_updated} vectored — "
+                "an assignment expression changed row counts, refusing to commit"
+            )
+        version = _commit(
+            fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
+            removed=(), vectored=counts, sidecar=sidecar,
+            conflict="concurrent commit touched {rel} after this MOR update "
+            "probed it ({table_dir} v{cur}); rerun against the new head",
+            validated=manifest.get("constraints", {}), redo="update",
+            action="mor_update", condition=condition,
+            set=dict(sorted(assignments.items())), rows_updated=rows_updated,
+        )[0]
+    return {
+        "version": version, "rows_updated": rows_updated,
+        "files_with_dvs": len(counts), "files_added": len(staged.files),
+        "files_rewritten": 0,
+        "files_skipped_by_stats": len(all_files) - len(candidates),
+    }
 
 
 def merge_into_mor(
@@ -2907,171 +2825,65 @@ def merge_into_mor(
     "rows_inserted", "files_with_dvs", "files_added",
     "files_rewritten" (always 0)}``.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    fs, jvm, head, manifest = _head(
+        spark, table_dir, "merge_into_mor", key=idempotency_key
+    )
+
+    def _result(version, updated, deleted, inserted, hit, added):
+        return {
+            "version": version, "rows_updated": updated, "rows_deleted": deleted,
+            "rows_inserted": inserted, "files_with_dvs": hit,
+            "files_added": added, "files_rewritten": 0,
+        }
 
     def _replayed(prior: int) -> dict:
         man = _read_manifest(fs, jvm, table_dir, prior)
-        return {
-            "version": prior,
-            "rows_updated": man.get("rows_updated", 0),
-            "rows_deleted": man.get("rows_deleted", 0),
-            "rows_inserted": man.get("rows_inserted", 0),
-            "files_with_dvs": man.get("mor_files_with_dvs", 0),
-            "files_added": len(man.get("added", [])),
-            "files_rewritten": 0,
-        }
-
-    if idempotency_key is not None:
-        prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, head)
-        if prior is not None:
-            return _replayed(prior)
-
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, "merge_into_mor")
-    all_files = manifest["files"]
-    keys = list(key_cols)
-    tcols = [f["name"] for f in manifest.get("schema", {}).get("fields", [])]
-    if tcols and delete_condition is None and source.columns != tcols:
-        missing = set(tcols) ^ set(source.columns)
-        raise ValueError(
-            f"merge_into_mor requires the source to match the table schema "
-            f"{tcols}; differ on {sorted(missing) or 'column order'}"
-        )
-    if tcols and not set(tcols) <= set(source.columns):
-        raise ValueError(
-            f"merge_into_mor source is missing table columns "
-            f"{sorted(set(tcols) - set(source.columns))}"
-        )
-    out_cols = tcols or list(source.columns)
-    value_cols = [c for c in out_cols if c not in keys]
-    src = source.withColumn(
-        "__del",
-        F.coalesce(F.expr(delete_condition), F.lit(False))
-        if delete_condition is not None
-        else F.lit(False),
-    )
-    _refuse_null_merge_keys(source, keys, "merge_into_mor")
-    dup = (
-        source.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_into_mor source has multiple rows for key "
-            f"{tuple(dup[0][k] for k in keys)} — ambiguous MERGE refused"
+        return _result(
+            prior, man.get("rows_updated", 0), man.get("rows_deleted", 0),
+            man.get("rows_inserted", 0), man.get("mor_files_with_dvs", 0),
+            len(man.get("added", [])),
         )
 
-    live = (
-        _scan(spark, table_dir, manifest, all_files)
-        .withColumn("__file", F.col("_metadata.file_name"))
-        .withColumn("__pos", F.col("_metadata.row_index"))
+    if manifest is None:
+        return _replayed(head)
+    files = manifest["files"]
+    join, inserts, merged = _merge_source(
+        spark, table_dir, manifest, source, list(key_cols), delete_condition,
+        "merge_into_mor",
     )
-    dv = _dv_frame(spark, table_dir, manifest)
-    if dv is not None:
-        live = live.join(dv, ["__file", "__pos"], "left_anti")
-
-    t = live.alias("t")
-    s = src.alias("s")
-    joined = t.join(
-        s, on=F.expr(" AND ".join(f"t.{k} <=> s.{k}" for k in keys)), how="inner"
-    ).persist()
-    tag = uuid.uuid4().hex[:12]
-    dv_rel = f"{_DV}/v{tag}"
-    staging = f"{table_dir}/staging-{tag}"
+    joined = _match(spark, table_dir, manifest, files, join).persist()
     try:
-        joined.select(
-            F.col("t.__file").alias("__file"), F.col("t.__pos").alias("__pos")
-        ).write.parquet(f"{table_dir}/{dv_rel}")
-        per_file = {
-            r["__file"]: int(r["n"])
-            for r in spark.read.schema(_DV_SCHEMA).parquet(f"{table_dir}/{dv_rel}")
-            .groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }  # metadata-scale: one row per matched file
-        rows_matched = sum(per_file.values())
-        rows_deleted = joined.filter(F.col("s.__del")).count() if rows_matched else 0
-        rows_updated = rows_matched - rows_deleted
-        # matched copies re-append with source values (multiplicity kept);
-        # unmatched non-delete source rows insert
-        updated = (
-            joined.filter(~F.col("s.__del"))
-            .select(
-                *[F.col(f"t.{k}").alias(k) for k in keys],
-                *[F.col(f"s.{c}").alias(c) for c in value_cols],
-            )
-            .select(*out_cols)
+        sidecar, counts = _vector(fs, jvm, table_dir, joined, files)
+        rows_deleted = joined.filter(F.col("s.__del")).count() if counts else 0
+        rows_updated = sum(counts.values()) - rows_deleted
+        # MOR: the matched copies re-append with source values
+        # (multiplicity kept), plus the NOT-MATCHED inserts
+        staged = _stage(
+            fs, jvm, table_dir, manifest, merged(joined).unionByName(inserts),
+            "g", "merged row(s) — MERGE refused", sidecar,
         )
-        inserts = (
-            src.filter(~F.col("__del"))
-            .join(live.select(*keys), on=keys, how="left_anti")
-            .select(*out_cols)
-        )
-        staged_df = updated.unionByName(inserts)
-        staged_df.write.parquet(staging)
     finally:
         joined.unpersist()
-
-    def _undo():
-        fs.delete(Path(staging), True)
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)
-
-    constraints = manifest.get("constraints", {})
-    _check_constraints(
-        spark, staging, staged_df.schema, constraints,
-        "merged row(s) — MERGE refused", _undo,
-    )
-
-    meta = _staged_meta(
-        spark, staging, staged_df.schema, _stats_cols(manifest), _bloom_specs(manifest)
-    )
-    rows_inserted = sum(meta[1].values()) - rows_updated
-
-    by_name = {rel.rsplit("/", 1)[-1]: rel for rel in all_files}
-    new_counts = {by_name[name]: n for name, n in per_file.items()}
-    if not new_counts and rows_inserted == 0:
-        _undo()  # all-miss empty source: nothing committed
-        return {
-            "version": head,
-            "rows_updated": 0,
-            "rows_deleted": 0,
-            "rows_inserted": 0,
-            "files_with_dvs": 0,
-            "files_added": 0,
-            "files_rewritten": 0,
-        }
-
-    staged = _move_staged(fs, jvm, table_dir, staging, f"g{tag}", meta)
-    if not new_counts:
-        fs.delete(Path(f"{table_dir}/{dv_rel}"), True)  # pure-insert merge
+    rows_inserted = sum(staged.rows.values()) - rows_updated
+    if not counts and rows_inserted == 0:
+        _drop_paths(fs, jvm, table_dir, *staged.files)  # all-miss empty source
+        return _result(head, 0, 0, 0, 0, 0)
     version, fresh = _commit(
         fs, jvm, table_dir, _unbucketed, probe=(head, manifest), new=staged,
-        removed=(), vectored=new_counts, sidecar=dv_rel if new_counts else None,
+        removed=(), vectored=counts, sidecar=sidecar,
         conflict="concurrent commit touched {rel} after this MOR merge "
         "probed it ({table_dir} v{cur}); rerun against the new head",
-        validated=constraints, redo="merge", key=idempotency_key,
-        action="mor_merge", rows_updated=rows_updated,
+        validated=manifest.get("constraints", {}), redo="merge",
+        key=idempotency_key, action="mor_merge", rows_updated=rows_updated,
         rows_deleted=rows_deleted, rows_inserted=rows_inserted,
-        mor_files_with_dvs=len(new_counts),
+        mor_files_with_dvs=len(counts),
     )
     if not fresh:
         return _replayed(version)
-    return {
-        "version": version,
-        "rows_updated": rows_updated,
-        "rows_deleted": rows_deleted,
-        "rows_inserted": rows_inserted,
-        "files_with_dvs": len(new_counts),
-        "files_added": len(staged.files),
-        "files_rewritten": 0,
-    }
+    return _result(
+        version, rows_updated, rows_deleted, rows_inserted, len(counts),
+        len(staged.files),
+    )
 
 
 def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
@@ -3088,27 +2900,15 @@ def materialize_dvs(spark: SparkSession, table_dir: str) -> dict:
     version, zero counts) when the table has no DVs. Returns
     ``{"version", "files_rewritten", "rows_removed"}``.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_mapping(manifest, "materialize_dvs")
+    fs, jvm, head, manifest = _head(spark, table_dir, "materialize_dvs")
     dvs = manifest.get("dvs", {})
     if not dvs:
         return {"version": head, "files_rewritten": 0, "rows_removed": 0}
     hit_files = sorted(dvs)
     rows_removed = sum(int(n) for n in dvs.values())
-
-    tag = uuid.uuid4().hex[:12]
-    staging = f"{table_dir}/staging-{tag}"
-    live = _read_with_dvs(spark, table_dir, manifest, hit_files)
-    live.write.parquet(staging)
-    staged = _move_staged(
-        fs, jvm, table_dir, staging, f"p{tag}",
-        _staged_meta(
-            spark, staging, live.schema, _stats_cols(manifest), _bloom_specs(manifest)
-        ),
+    staged = _stage(
+        fs, jvm, table_dir, manifest,
+        _read_with_dvs(spark, table_dir, manifest, hit_files), "p",
     )
     # vectors that landed on other files while we staged carry
     version = _commit(
@@ -3184,11 +2984,7 @@ def merge_into(
     "rows_inserted", "files_rewritten", "files_untouched"}``; an
     all-miss empty source commits nothing.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    fs, jvm, head, manifest = _head(spark, table_dir, "merge_into", key=idempotency_key)
 
     def _replayed(prior: int) -> dict:
         man = _read_manifest(fs, jvm, table_dir, prior)
@@ -3201,171 +2997,66 @@ def merge_into(
             "files_untouched": len(man["files"]) - len(man.get("added", [])),
         }
 
-    if idempotency_key is not None:
-        prior = _find_idempotent(fs, jvm, table_dir, idempotency_key, head)
-        if prior is not None:
-            return _replayed(prior)
-
-    manifest = _read_manifest(fs, jvm, table_dir, head)
-    _refuse_dvs(manifest, manifest["files"], "merge_into")
-    _refuse_mapping(manifest, "merge_into")
+    if manifest is None:
+        return _replayed(head)
     all_files = manifest["files"]
-    keys = list(key_cols)
-    tcols = [f["name"] for f in manifest.get("schema", {}).get("fields", [])]
-    if tcols and delete_condition is None and source.columns != tcols:
-        missing = set(tcols) ^ set(source.columns)
-        raise ValueError(
-            f"merge_into requires the source to match the table schema "
-            f"{tcols}; differ on {sorted(missing) or 'column order'}"
-        )
-    if tcols and not set(tcols) <= set(source.columns):
-        raise ValueError(
-            f"merge_into source is missing table columns "
-            f"{sorted(set(tcols) - set(source.columns))}"
-        )
-    out_cols = tcols or [c for c in source.columns]
-    value_cols = [c for c in out_cols if c not in keys]
-    src = source.withColumn(
-        "__del",
-        F.coalesce(F.expr(delete_condition), F.lit(False))
-        if delete_condition is not None
-        else F.lit(False),
+    _refuse_dvs(manifest, all_files, "merge_into")
+    join, inserts, merged = _merge_source(
+        spark, table_dir, manifest, source, list(key_cols), delete_condition,
+        "merge_into",
     )
-
-    _refuse_null_merge_keys(source, keys, "merge_into")
-    # Delta's ambiguity rule: a target row matching >1 source row has no
-    # well-defined update — refuse before touching anything
-    dup = (
-        source.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
+    # the match probe reads only the target's keys
+    hits = _hits(
+        _match(spark, table_dir, manifest, all_files, join), all_files,
+        F.sum(F.col("s.__del").cast("int")).alias("nd"),
     )
-    if dup:
-        raise ValueError(
-            f"merge_into source has multiple rows for key "
-            f"{tuple(dup[0][k] for k in keys)} — ambiguous MERGE refused"
-        )
-
-    tgt_keys = _scan(spark, table_dir, manifest, all_files).select(
-        F.input_file_name().alias("__file"), *keys
-    )
-    skeys = src.select(*keys, "__del").distinct()
-    # matched-file probe: one key-pruned scan, metadata-scale collect
-    probe = (
-        tgt_keys.join(skeys, on=keys, how="inner")
-        .groupBy("__file")
-        .agg(
-            F.sum(F.when(F.col("__del"), 0).otherwise(1)).alias("nu"),
-            F.sum(F.when(F.col("__del"), 1).otherwise(0)).alias("nd"),
-        )
-        .collect()
-    )
-    hit_names = {r["__file"].rsplit("/", 1)[-1] for r in probe}
-    hit_files = [rel for rel in all_files if rel.rsplit("/", 1)[-1] in hit_names]
-    rows_updated = int(sum(r["nu"] for r in probe))
-    rows_deleted = int(sum(r["nd"] for r in probe))
-
-    # a delete-flagged source row never inserts (absent-key delete = no-op)
-    inserts = (
-        src.filter(~F.col("__del"))
-        .join(tgt_keys.select(*keys), on=keys, how="left_anti")
-        .select(*out_cols)
-    )
-
-    def _result(version, rewritten=0, inserted=0):
-        return {
-            "version": version,
-            "rows_updated": rows_updated if rewritten else 0,
-            "rows_deleted": rows_deleted if rewritten else 0,
-            "rows_inserted": inserted,
-            "files_rewritten": rewritten,
-            "files_untouched": len(all_files) - rewritten,
-        }
-
-    # updated hit rows: left join keeps unmatched neighbors in the same
-    # files byte-identical; matched rows take every source column (a NULL
-    # in a matched source column still wins — MERGE's UPDATE SET t.c=s.c);
-    # matched rows whose source row is delete-flagged are dropped
+    hit_files = list(hits)
+    rows_deleted = int(sum(r["nd"] for r in hits.values()))
+    rows_updated = sum(r["n"] for r in hits.values()) - rows_deleted
+    # COW: rewrite the hit files; the left join keeps their unmatched
+    # rows byte-identical
+    staged_df = inserts
     if hit_files:
-        t = _scan(spark, table_dir, manifest, hit_files).alias("t")
-        s = src.withColumn("__src", F.lit(1)).alias("s")
-        src_exists = F.col("s.__src").isNotNull()
-        rewritten = (
-            t.join(
-                s,
-                on=F.expr(" AND ".join(f"t.{k} <=> s.{k}" for k in keys)),
-                how="left",
-            )
-            .filter(~(src_exists & F.col("s.__del")))
-            .select(
-                *[F.col(f"t.{k}").alias(k) for k in keys],
-                *[
-                    F.when(src_exists, F.col(f"s.{c}"))
-                    .otherwise(F.col(f"t.{c}"))
-                    .alias(c)
-                    for c in value_cols
-                ],
-            )
-            .select(*out_cols)
-        )
-        staged_df = rewritten.unionByName(inserts)
-    else:
-        staged_df = inserts
-
-    tag = uuid.uuid4().hex[:12]
-    staging = f"{table_dir}/staging-{tag}"
-    staged_df.write.parquet(staging)
-
-    # CHECK validation on everything this merge writes (an update can
-    # violate just as an insert can); refusal removes the staging dir
-    # atomically, nothing committed
-    constraints = manifest.get("constraints", {})
-    _check_constraints(
-        spark, staging, staged_df.schema, constraints,
-        "merged row(s) — MERGE refused", lambda: fs.delete(Path(staging), True),
+        staged_df = merged(
+            join(_scan(spark, table_dir, manifest, hit_files), "left")
+        ).unionByName(inserts)
+    staged = _stage(
+        fs, jvm, table_dir, manifest, staged_df, "m", "merged row(s) — MERGE refused"
     )
-    staged = _move_staged(
-        fs, jvm, table_dir, staging, f"m{tag}",
-        _staged_meta(
-            spark, staging, staged_df.schema, _stats_cols(manifest),
-            _bloom_specs(manifest),
-        ),
-    )
-
     hit_rows_before = sum(manifest.get("rows", {}).get(rel, 0) for rel in hit_files)
     rows_inserted = sum(staged.rows.values()) - hit_rows_before + rows_deleted
-    if not hit_files and rows_inserted == 0:
-        # nothing matched, nothing to insert: drop the empty staged
-        # file(s), commit nothing
-        for rel in staged.files:
-            fs.delete(Path(f"{table_dir}/{rel}"), False)
-        return _result(head)
+    version = head
+    if hit_files or rows_inserted:
+        conflict = (
+            "concurrent commit touched files this MERGE rewrote "
+            "({table_dir} v{cur}); rerun the merge against the new head"
+        )
 
-    conflict = (
-        "concurrent commit touched files this MERGE rewrote "
-        "({table_dir} v{cur}); rerun the merge against the new head"
-    )
+        def build(parent: dict, cur: int) -> dict:
+            # a concurrent MOR delete anywhere, even on a file this merge
+            # did not hit: the raw-read staging and insert anti-join would
+            # resurrect vectored rows, and committing would drop the vectors
+            if parent.get("dvs"):
+                raise RuntimeError(conflict.format(table_dir=table_dir, cur=cur))
+            return _unbucketed(parent, cur)
 
-    def build(parent: dict, cur: int) -> dict:
-        # a concurrent MOR delete anywhere, even on a file this merge did
-        # not hit: the raw-read staging and insert anti-join would
-        # resurrect vectored rows, and committing would drop the vectors
-        if parent.get("dvs"):
-            raise RuntimeError(conflict.format(table_dir=table_dir, cur=cur))
-        return _unbucketed(parent, cur)
-
-    version, fresh = _commit(
-        fs, jvm, table_dir, build, probe=(head, manifest), new=staged,
-        removed=hit_files, conflict=conflict,
-        validated=constraints, redo="merge", key=idempotency_key,
-        action="merge", rows_updated=rows_updated,
-        rows_deleted=rows_deleted, rows_inserted=rows_inserted,
-    )
-    if not fresh:
-        return _replayed(version)
-    return _result(version, len(hit_files), rows_inserted)
+        version, fresh = _commit(
+            fs, jvm, table_dir, build, probe=(head, manifest), new=staged,
+            removed=hit_files, conflict=conflict,
+            validated=manifest.get("constraints", {}), redo="merge",
+            key=idempotency_key, action="merge", rows_updated=rows_updated,
+            rows_deleted=rows_deleted, rows_inserted=rows_inserted,
+        )
+        if not fresh:
+            return _replayed(version)
+    else:  # nothing matched, nothing to insert: commit nothing
+        _drop_paths(fs, jvm, table_dir, *staged.files)
+    return {
+        "version": version, "rows_updated": rows_updated,
+        "rows_deleted": rows_deleted, "rows_inserted": rows_inserted,
+        "files_rewritten": len(hit_files),
+        "files_untouched": len(all_files) - len(hit_files),
+    }
 
 
 def apply_changes(
@@ -3509,12 +3200,7 @@ def metadata_agg(
     Returns ``{"n_rows": int, "n_files": int, "min": {col: v},
     "max": {col: v}}`` (min/max keys only for requested ``cols``).
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    if version is None:
-        version = current_version(spark, table_dir)
-    if version == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, version)
+    _, _, version, manifest = _head(spark, table_dir, version=version)
     files = manifest["files"]
     rows = manifest.get("rows", {})
     missing = [rel for rel in files if rel not in rows]
@@ -3594,12 +3280,7 @@ def count_where(
     Returns ``{"n_rows", "files_skipped", "files_from_stats",
     "files_scanned"}``.
     """
-    fs, _, jvm = _fs(spark, table_dir)
-    if version is None:
-        version = current_version(spark, table_dir)
-    if version == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    manifest = _read_manifest(fs, jvm, table_dir, version)
+    _, _, version, manifest = _head(spark, table_dir, version=version)
     rows = manifest.get("rows", {})
     stats = manifest.get("stats", {})
     dvs = manifest.get("dvs", {})
@@ -3685,9 +3366,7 @@ def add_constraint(
 
 
 def _constraint_mentions(constraints: dict, col: str) -> list[str]:
-    import re as _re
-
-    pat = _re.compile(rf"\b{_re.escape(col)}\b")
+    pat = _re_mod.compile(rf"\b{_re_mod.escape(col)}\b")
     return sorted(n for n, e in constraints.items() if pat.search(e))
 
 
@@ -3874,9 +3553,8 @@ def evolve_partition_spec(
 def drop_constraint(spark: SparkSession, table_dir: str, name: str) -> int:
     """Remove a CHECK constraint in a metadata-only commit (unknown names
     raise — a typo must not silently 'succeed')."""
-    fs, _, jvm = _fs(spark, table_dir)
-    head = current_version(spark, table_dir)
-    if name not in _read_manifest(fs, jvm, table_dir, head).get("constraints", {}):
+    fs, jvm, _, manifest = _head(spark, table_dir)
+    if name not in manifest.get("constraints", {}):
         raise KeyError(f"no CHECK constraint {name!r} on {table_dir}")
 
     def build(parent: dict, head: int) -> dict:
@@ -3899,12 +3577,8 @@ def describe_detail(spark: SparkSession, table_dir: str) -> dict:
     awaiting materialize), "stats_cols", "bloom_cols", "constraints",
     "schema_fields"}``.
     """
-    fs, _, jvm = _fs(spark, table_dir)
+    fs, jvm, head, man = _head(spark, table_dir)
     Path = jvm.org.apache.hadoop.fs.Path
-    head = current_version(spark, table_dir)
-    if head == 0:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    man = _read_manifest(fs, jvm, table_dir, head)
     files = man["files"]
     rows = man.get("rows")
     dvs = man.get("dvs", {})
@@ -4083,8 +3757,7 @@ def read_changes_cdf(
     ``read_changes``.
     """
     fs, _, jvm = _fs(spark, table_dir)
-    if to_version is None:
-        to_version = current_version(spark, table_dir)
+    to_version = current_version(spark, table_dir) if to_version is None else to_version
     frames = []
     for v in range(from_version + 1, to_version + 1):
         man = _read_manifest(fs, jvm, table_dir, v)
@@ -4114,35 +3787,15 @@ def read_changes_cdf(
         if not added and not removed and not dv_diff:
             continue  # metadata-only commit (constraints, clone)
 
-        if dv_diff:
-            pos_cur = _dv_frame(spark, table_dir, man)
-            pos_par = _dv_frame(spark, table_dir, par_m)
-            names = {rel.rsplit("/", 1)[-1] for rel in dv_diff}
-            data = (
-                _scan(spark, table_dir, man, dv_diff)
-                .withColumn("__file", F.col("_metadata.file_name"))
-                .withColumn("__pos", F.col("_metadata.row_index"))
-            )
-            dcols = [c for c in data.columns if c not in ("__file", "__pos")]
-
-            def _pos_delta(a, b):
-                """positions in a but not b, limited to the diff files"""
-                if a is None:
-                    return None
-                d = a.filter(F.col("__file").isin(*names))
-                if b is not None:
-                    d = d.join(b, ["__file", "__pos"], "left_anti")
-                return d
-
-            for delta, ctype in (
-                (_pos_delta(pos_cur, pos_par), "delete"),
-                (_pos_delta(pos_par, pos_cur), "insert"),
-            ):
-                if delta is None:
-                    continue
+        # a row the commit vectored is live in the parent at a position
+        # the commit's sidecars hold; a resurrected row the reverse
+        for live_in, pos_in, ctype in ((par_m, man, "delete"), (man, par_m, "insert")):
+            pos = _dv_frame(spark, table_dir, pos_in) if dv_diff else None
+            if pos is not None:
                 frames.append(
-                    data.join(delta, ["__file", "__pos"], "left_semi")
-                    .select(*dcols)
+                    _match(spark, table_dir, live_in, dv_diff,
+                           lambda t: t.join(pos, ["__file", "__pos"], "left_semi"))
+                    .drop("__file", "__pos")
                     .withColumn("_change_type", F.lit(ctype))
                     .withColumn("_commit_version", F.lit(v).cast("long"))
                 )
@@ -4197,20 +3850,14 @@ def read_changes_cdf(
             F.explode(F.sequence(F.lit(1), F.abs(F.col("__d")))).alias("__i"),
         ).drop("__i").withColumn("_commit_version", F.lit(v).cast("long"))
         frames.append(expanded)
-    if not frames:
-        head = current_version(spark, table_dir)
-        if head == 0:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    if not frames:  # an explicit head version: no table still refuses
         return (
-            read_snapshot(spark, table_dir, version=head)
+            read_snapshot(spark, table_dir, version=current_version(spark, table_dir))
             .limit(0)
             .withColumn("_change_type", F.lit("insert"))
             .withColumn("_commit_version", F.lit(0).cast("long"))
         )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def verify_constraints(spark: SparkSession, table_dir: str) -> DataFrame:

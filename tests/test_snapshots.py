@@ -4,6 +4,7 @@ optimistic-commit retry when a competing manifest lands first."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -1331,6 +1332,18 @@ def test_update_where_casts_to_existing_type_and_refuses_new_columns(spark, tdir
         sn.update_where(spark, tdir, {}, "i = 0")
 
 
+@pytest.mark.parametrize("op", ["update_where", "update_where_mor"])
+def test_update_set_targets_checked_before_pruning(spark, tdir, op):
+    """An unknown SET target refuses even when pruning leaves no
+    candidate file — the check reads the manifest schema, not a scan."""
+    sn.write_snapshot(_iv(spark, 0, 40), tdir, stats_cols=("i",))
+    with pytest.raises(ValueError, match=r"SET targets \['nope'\] do not exist"):
+        getattr(sn, op)(
+            spark, tdir, {"nope": "'x'"}, "i < 5", prune={"i": (1000, 2000)}
+        )
+    assert sn.current_version(spark, tdir) == 1
+
+
 def test_update_where_no_match_commits_nothing(spark, tdir):
     sn.write_snapshot(_iv(spark, 0, 10), tdir)
     head = sn.current_version(spark, tdir)
@@ -1918,6 +1931,45 @@ def test_merge_into_mor_semantics_match_cow_twin(spark, tdir, tmp_path):
     assert m == c == [(1, None), (1, None), (2, "z"), (9, "ins")]
 
 
+_TWIN_DML = {
+    # NULL-condition rows (i IS NULL) are kept and left untouched
+    "delete": (
+        lambda spark, t: sn.delete_where(spark, t, "i >= 3"),
+        lambda spark, t: sn.delete_where_mor(spark, t, "i >= 3"),
+        [(1, "x", "p"), (2, None, "q"), (None, "n", "m")],
+    ),
+    # a swap: SET expressions all see the OLD row
+    "update": (
+        lambda spark, t: sn.update_where(spark, t, {"a": "b", "b": "a"}, "i >= 3"),
+        lambda spark, t: sn.update_where_mor(spark, t, {"a": "b", "b": "a"}, "i >= 3"),
+        [(1, "x", "p"), (2, None, "q"), (3, None, "z"), (4, "r", "x"), (None, "n", "m")],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TWIN_DML))
+def test_dml_mor_semantics_match_cow_twin(spark, tdir, tmp_path, op):
+    """COW and MOR delete/update must produce identical row counts and
+    logical tables on identical inputs, NULL-condition rows included."""
+    cow_op, mor_op, want = _TWIN_DML[op]
+    cow = str(tmp_path / "cow")
+    for d in (tdir, cow):
+        for rows in ([(1, "x", "p"), (2, None, "q"), (3, "z", None)],
+                     [(4, "x", "r"), (None, "n", "m")]):
+            sn.write_snapshot(
+                spark.createDataFrame(rows, "i long, a string, b string").coalesce(1), d
+            )
+    r_cow, r_mor = cow_op(spark, cow), mor_op(spark, tdir)
+    counts = {k for k in r_cow if k.startswith("rows_")}
+    assert {k: r_mor[k] for k in counts} == {k: r_cow[k] for k in counts}
+    assert sum(r_cow[k] for k in counts) == 2
+
+    def rows(d):
+        return sorted(repr(tuple(r)) for r in sn.read_snapshot(spark, d).collect())
+
+    assert rows(tdir) == rows(cow) == sorted(map(repr, want))
+
+
 def test_merge_into_mor_cdf_and_ambiguity(spark, tdir):
     sn.write_snapshot(_kv(spark, 0, 10).coalesce(1), tdir)
     src = _kv(spark, 5, 6, tag="n")
@@ -2143,6 +2195,19 @@ _GATE_OPS = {
         ),
         13,
     ),
+    "delete_keys_mor": (
+        _gate_write,
+        lambda spark, tdir: sn.delete_keys_mor(
+            spark, tdir, _gate_table(spark).filter("i < 5"), "i"
+        ),
+        4,
+    ),
+    # one file straddles the range, the other is skipped by its stats
+    "delete_range": (
+        _gate_write,
+        lambda spark, tdir: sn.delete_range(spark, tdir, "i", 0, 4),
+        5,
+    ),
     # selective compaction of the two small files _gate_write leaves
     "optimize_snapshot_selective": (
         _gate_write,
@@ -2190,3 +2255,135 @@ def test_dml_job_count_gate(spark, tdir, op):
     ]
     assert not inference, f"{op} sampled parquet footers in jobs {inference}"
     assert len(jobs) <= ceiling, (op, len(jobs))
+
+
+# ------------------------------------------- latent-defect regressions
+# column mapping through constraint commits, DV-safe bucketed reads,
+# NULL-safe CDF diffing, typed prune bounds, idempotency-key carry, NULL
+# CDC ops, evolved-schema rewrites
+
+
+def test_constraint_commits_keep_column_mapping(spark, tdir):
+    """add/drop_constraint are metadata-only: they must carry the column
+    mapping (and dropped_physical) or the table silently demaps — reads
+    revert to physical names and the next append writes mixed name
+    generations."""
+    sn.write_snapshot(_kv(spark, 0, 5), tdir)
+    sn.rename_column(spark, tdir, "v", "label")
+    sn.add_constraint(spark, tdir, "pos", "i >= 0")
+    got = sn.read_snapshot(spark, tdir)
+    assert set(got.columns) == {"i", "label"}  # still logical names
+    # append still translates logical -> physical
+    extra = spark.range(5, 8).select(
+        F.col("id").alias("i"), F.concat(F.lit("a-"), F.col("id")).alias("label")
+    )
+    sn.write_snapshot(extra, tdir)
+    out = sn.read_snapshot(spark, tdir)
+    assert out.count() == 8
+    assert out.filter("label IS NULL").count() == 0  # no mixed generations
+    sn.drop_constraint(spark, tdir, "pos")
+    assert set(sn.read_snapshot(spark, tdir).columns) == {"i", "label"}
+    # dropped_physical also survives a constraint commit
+    d2 = tdir + "-drop"
+    sn.write_snapshot(_kv(spark, 0, 5), d2)
+    sn.drop_column(spark, d2, "v")
+    sn.add_constraint(spark, d2, "pos", "i >= 0")
+    man = sn.snapshot_info(spark, d2, sn.current_version(spark, d2))
+    assert man.get("dropped_physical") == ["v"]
+    assert set(sn.read_snapshot(spark, d2).columns) == {"i"}
+
+
+def test_bucketed_read_refuses_mor_deleted_rows(spark, tdir):
+    """A MOR delete keeps every file bucket-named, so bucket_by survives —
+    but the bucketed catalog read scans RAW files with no DV anti-join
+    and would resurrect the deleted rows: it must refuse."""
+    df = spark.range(0, 100).selectExpr("id as k")
+    sn.write_snapshot(df, tdir, bucket_by=("k", 4))
+    res = sn.delete_where_mor(spark, tdir, "k < 10")
+    assert res["rows_deleted"] == 10
+    assert sn.read_snapshot(spark, tdir).count() == 90  # normal read: fine
+    with pytest.raises(ValueError, match="deletion vectors"):
+        sn.read_snapshot_bucketed(spark, tdir, "t_mor_b")
+
+
+def test_cdf_null_rows_cancel_across_rewrites(spark, tdir):
+    """read_changes_cdf diffs added vs removed rows: a row containing a
+    NULL must cancel across an OPTIMIZE rewrite (null-SAFE equality) —
+    the name-list join's EqualTo emitted a spurious insert+delete."""
+    base = spark.createDataFrame(
+        [(1, None), (2, "x"), (3, None)], "i long, v string"
+    )
+    sn.write_snapshot(base.repartition(2), tdir)
+    sn.write_snapshot(_kv(spark, 10, 14), tdir)  # small files to compact
+    v = sn.optimize_snapshot(spark, tdir, target_mb=128, min_file_mb=1)
+    cdf = sn.read_changes_cdf(spark, tdir, from_version=v, to_version=v)
+    assert cdf.count() == 0, cdf.collect()  # pure rewrite: nothing changed
+
+
+def test_prune_accepts_typed_date_bounds(spark, tdir):
+    """Typed (date/datetime) prune and point bounds must compare against
+    the manifest's string-stored stats instead of raising TypeError."""
+    df = spark.range(0, 60).select(
+        F.col("id").alias("i"),
+        F.expr("date_add(date'2024-01-01', CAST(id AS INT))").alias("d"),
+    )
+    sn.write_snapshot(df.repartition(3), tdir, stats_cols=("d",))
+    lo, hi = datetime.date(2024, 1, 10), datetime.date(2024, 1, 20)
+    got = sn.read_snapshot(spark, tdir, prune={"d": (lo, hi)})
+    assert got.filter("d BETWEEN date'2024-01-10' AND date'2024-01-20'").count() == 11
+    got_p = sn.read_snapshot(spark, tdir, point={"d": datetime.date(2024, 1, 5)})
+    assert got_p.filter("d = date'2024-01-05'").count() == 1
+    # DML prune with typed bounds
+    res = sn.delete_where(
+        spark, tdir, "d < date'2024-01-03'", prune={"d": (None, lo)}
+    )
+    assert res["rows_deleted"] == 2
+
+
+def test_mor_delete_does_not_replicate_idempotency_key(spark, tdir):
+    """A MOR delete after an idempotent commit must not carry that
+    commit's idempotency_key — a redelivered batch would otherwise
+    resolve to the delete's version with wrong accounting."""
+    sn.write_snapshot(_kv(spark, 0, 5), tdir)
+    v2 = sn.write_snapshot(_kv(spark, 5, 9), tdir, idempotency_key="batch-7")
+    sn.delete_where_mor(spark, tdir, "i = 1")
+    man = sn.snapshot_info(spark, tdir, sn.current_version(spark, tdir))
+    assert "idempotency_key" not in man
+    # the redelivered batch still resolves to ITS version
+    assert sn.write_snapshot(_kv(spark, 5, 9), tdir, idempotency_key="batch-7") == v2
+
+
+def test_apply_changes_refuses_null_op(spark, tdir):
+    sn.write_snapshot(_kv(spark, 0, 5), tdir)
+    changes = spark.createDataFrame(
+        [(1, "x", 1, "U"), (2, "y", 2, None)],
+        "i long, v string, seq long, _op string",
+    )
+    with pytest.raises(ValueError):
+        sn.apply_changes(spark, tdir, changes, ("i",), "seq", op_col="_op")
+
+
+def test_optimize_preserves_evolved_schema(spark, tdir):
+    """Full-rewrite OPTIMIZE on an additively-evolved table must keep the
+    later-added columns (a plain multi-schema read samples one footer
+    and would narrow the rewrite, silently dropping columns)."""
+    sn.write_snapshot(_kv(spark, 0, 40).repartition(2), tdir)
+    evolved = spark.range(40, 80).select(
+        F.col("id").alias("i"),
+        F.concat(F.lit("a-"), F.col("id")).alias("v"),
+        (F.col("id") * 2).alias("extra"),
+    )
+    sn.write_snapshot(evolved.repartition(2), tdir, allow_schema_evolution=True)
+    v = sn.optimize_snapshot(spark, tdir)  # full rewrite
+    got = sn.read_snapshot(spark, tdir, version=v)
+    assert "extra" in got.columns
+    assert got.filter("extra IS NOT NULL").count() == 40
+    assert got.count() == 80
+    # COW delete across the evolution boundary keeps the columns too
+    d2 = tdir + "-del"
+    sn.write_snapshot(_kv(spark, 0, 40).coalesce(1), d2)
+    sn.write_snapshot(evolved.coalesce(1), d2, allow_schema_evolution=True)
+    sn.delete_where(spark, d2, "i in (5, 45)")  # hits BOTH generations
+    out = sn.read_snapshot(spark, d2, merge_schema=True)
+    assert out.count() == 78
+    assert out.filter("extra IS NOT NULL").count() == 39
