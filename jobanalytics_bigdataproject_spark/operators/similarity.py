@@ -309,13 +309,16 @@ def ann_recall_report(
     # the query frame is bounded by contract (a handful of probe vectors);
     # every arm re-reads it, so pin it once — and materialize it BEFORE
     # the concurrent arm pool below, so the threads read a warm cache
-    # instead of racing to compute the same blocks
+    # instead of racing to compute the same blocks. Every frame joins
+    # _RECALL_PINNED the moment it is persisted (here and in the arm pool),
+    # so a failing count or arm cannot leak what was already pinned.
     queries = queries.persist(StorageLevel.MEMORY_AND_DISK)
+    _RECALL_PINNED.append(queries)
     queries.count()
     exact = cosine_topk_bruteforce(embeddings, queries, k=k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _RECALL_PINNED.extend((queries, exact))
+    _RECALL_PINNED.append(exact)
     truth = exact.select("query_id", "neighbor_id")
 
     # --- concurrent arm construction + materialization (guide §2.6, r11) --
@@ -372,6 +375,7 @@ def ann_recall_report(
 
     def _built_and_pinned(build) -> DataFrame:
         df = build().persist(StorageLevel.MEMORY_AND_DISK)
+        _RECALL_PINNED.append(df)
         df.count()
         return df
 
@@ -400,6 +404,7 @@ def ann_recall_report(
             # all-pairs brute truth and the pigeonhole arm (signatures=sh
             # below) — the tokenize+xxhash pass is the expensive half
             df = simhash_docs(simhash_docs_frame).persist()
+            _RECALL_PINNED.append(df)
             sh_count.append(df.count())
             return df
 
@@ -421,9 +426,6 @@ def ann_recall_report(
     nd_pairs = results[pos] if neardup_threshold is not None else None
     sh = results[-1] if simhash_docs_frame is not None else None
     arms = [(m, p, df) for (m, p), df in zip(specs, arm_frames)]
-    _RECALL_PINNED.extend(arm_frames)
-    if nd_pairs is not None:
-        _RECALL_PINNED.append(nd_pairs)
 
     tagged = None
     for (method, param, _), df in zip(arms, arm_frames):
@@ -498,7 +500,6 @@ def ann_recall_report(
                 f"simhash recall arm got {n_docs} docs; the brute truth "
                 "is all-pairs — pass a bounded sample (<= 20k rows)"
             )
-        _RECALL_PINNED.append(sh)
         a, b = sh.alias("a"), sh.alias("b")
         sh_truth = (
             a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))

@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jobanalytics_bigdataproject_spark.session import fixture
+from jobanalytics_bigdataproject_spark.sources.readers import read_table
+
 DEFAULT_LGK = 12  # DataSketches lgConfigK: 2^12 buckets, ~1.6% RSE
 
 
@@ -100,24 +103,18 @@ def daily_distinct_report(
     ).orderBy("day")
 
 
-_HLL_STORE_CACHE: dict[str, str] = {}
-
-
 def hll_distinct_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing query: build the sketch store for the events fixture
     (once per process+sf_dir in a fresh tempdir — same staleness-proof
     pattern as the persisted IVF index: a fixed path would silently serve
     sketches of an older fixture generation), then answer a mid-month
     range rollup from the store without touching the events table."""
-    import tempfile
 
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
+    def build(root: str) -> str:
+        write_sketch_store(read_table(spark, sf_dir, "events"), root + "/store")
+        return root + "/store"
 
-    path = _HLL_STORE_CACHE.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="hll_store_") + "/store"
-        write_sketch_store(read_table(spark, sf_dir, "events"), path)
-        _HLL_STORE_CACHE[sf_dir] = path
+    path = fixture("hll_store", sf_dir, build)
     return merge_distinct_over_range(spark, path, start="2024-01-08", end="2024-01-21")
 
 
@@ -251,7 +248,15 @@ def quantiles_from_store(
     return cum.agg(*cols)
 
 
-_QUANTILE_STORE_CACHE: dict[str, str] = {}
+def _quantile_store(spark: SparkSession, sf_dir: str) -> str:
+    """The events histogram store, built once per process and shared by
+    ``quantile_rollup_query`` and ``store_drift_query``."""
+
+    def build(root: str) -> str:
+        write_quantile_store(read_table(spark, sf_dir, "events"), root + "/store")
+        return root + "/store"
+
+    return fixture("qstore", sf_dir, build)
 
 
 def quantile_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,15 +264,7 @@ def quantile_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-month range. Fully deterministic integer pipeline, so unlike the
     HLL queries this one IS oracle-checked — the DuckDB oracle rebuilds
     the same fixed-bucket histogram and picks the same bucket edges."""
-    import tempfile
-
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
-
-    path = _QUANTILE_STORE_CACHE.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qstore_") + "/store"
-        write_quantile_store(read_table(spark, sf_dir, "events"), path)
-        _QUANTILE_STORE_CACHE[sf_dir] = path
+    path = _quantile_store(spark, sf_dir)
     return quantiles_from_store(spark, path, start="2024-01-08", end="2024-01-21")
 
 
@@ -436,7 +433,6 @@ def cms_heavy_hitters_report(
     basis points. est ≥ exact must hold for every row (tested); the
     overestimate scales as N/width."""
     from jobanalytics_bigdataproject_spark.functions.exact import exact_div
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
 
     events = read_table(spark, sf_dir, "events")
     exact = (
@@ -467,23 +463,16 @@ def cms_heavy_hitters_report(
     )
 
 
-_CMS_STORE_CACHE: dict[str, str] = {}
-
-
 def cms_heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing query: per-process-fresh persisted CMS store (same
     staleness-proof tempdir pattern as the HLL store above), then the
     heavy-hitters measured-accuracy report answered from the store."""
-    import tempfile
 
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
+    def build(root: str) -> str:
+        write_cms_store(read_table(spark, sf_dir, "events"), root + "/store")
+        return root + "/store"
 
-    path = _CMS_STORE_CACHE.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="cms_store_") + "/store"
-        write_cms_store(read_table(spark, sf_dir, "events"), path)
-        _CMS_STORE_CACHE[sf_dir] = path
-    return cms_heavy_hitters_report(spark, sf_dir, path)
+    return cms_heavy_hitters_report(spark, sf_dir, fixture("cms_store", sf_dir, build))
 
 
 def bloom_bits_from_keys(
@@ -546,7 +535,6 @@ def bloom_prefilter_report(
     positives, false-positive basis points vs the REJECTED population.
     False negatives are impossible by construction (tested)."""
     from jobanalytics_bigdataproject_spark.functions.exact import exact_div
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
 
     orders = read_table(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
@@ -702,15 +690,6 @@ def store_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the per-process cache — ingest once, answer quantiles AND drift).
     Fully oracle-checked: DuckDB rebuilds both windows' histograms from
     the raw events with the identical bucket law."""
-    import tempfile
-
-    from jobanalytics_bigdataproject_spark.sources.readers import read_table
-
-    path = _QUANTILE_STORE_CACHE.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qstore_") + "/store"
-        write_quantile_store(read_table(spark, sf_dir, "events"), path)
-        _QUANTILE_STORE_CACHE[sf_dir] = path
     return drift_from_store(
-        spark, path, "2024-01-01", "2024-01-07", "2024-01-15", "2024-01-21"
+        spark, _quantile_store(spark, sf_dir), "2024-01-01", "2024-01-07", "2024-01-15", "2024-01-21"
     )

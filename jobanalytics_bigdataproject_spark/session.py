@@ -13,13 +13,25 @@ anywhere). Our engine pins the settings that matter at scale:
 - UTC session timezone so timestamp semantics are reproducible against the
   DuckDB oracle and across clusters.
 - Arrow enabled for the few pandas-interop paths (similarity/multimodal).
+
+``fixture`` is the other piece of process-scoped state: the tables,
+indexes, models and sketch stores that queries build once per process
+and then query.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -75,3 +87,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_FIXTURES: dict[tuple[str, str], object] = {}
+_FIXTURE_ROOT: str | None = None
+_FIXTURE_LOCK = threading.RLock()  # re-entrant: a build may use another fixture
+
+
+def fixture(name: str, sf_dir: str, build: Callable[[str], T]) -> T:
+    """What ``build(root)`` returns for ``(name, sf_dir)``, built at most
+    once per process.
+
+    ``root`` is a fresh directory named after the fixture under one
+    process root, which the first build creates under
+    ``tempfile.gettempdir()`` (so it follows ``TMPDIR``) and registers for
+    removal at exit — a process that builds nothing creates nothing. A
+    ``build`` that raises is not remembered: the next call rebuilds into a
+    new directory, so a half-built table is never served."""
+    global _FIXTURE_ROOT
+    key = (name, sf_dir)
+    with _FIXTURE_LOCK:
+        if key not in _FIXTURES:
+            if _FIXTURE_ROOT is None:
+                _FIXTURE_ROOT = tempfile.mkdtemp(prefix="spark_graft_fixtures_")
+                atexit.register(shutil.rmtree, _FIXTURE_ROOT, ignore_errors=True)
+            root = tempfile.mkdtemp(prefix=name + "_", dir=_FIXTURE_ROOT)
+            _FIXTURES[key] = build(root)
+        return _FIXTURES[key]

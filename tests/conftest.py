@@ -7,7 +7,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so pytest run from a second checkout
+# tests that checkout's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -12,9 +12,11 @@ this fail — the signal to shrink one or the other.
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 
@@ -47,7 +49,7 @@ def test_rows_only_never_displace_oracle_rows():
 
 
 def test_coverage_lockstep():
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import check_coverage
 
     assert check_coverage.check() == []

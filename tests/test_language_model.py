@@ -6,6 +6,8 @@ confident classes."""
 
 from __future__ import annotations
 
+import glob
+import os
 import random
 
 import pytest
@@ -98,3 +100,57 @@ def test_language_model_split_deterministic(spark):
     a = {r.doc_id: r.split for r in doc_language_classifier(docs).collect()}
     b = {r.doc_id: r.split for r in doc_language_classifier(docs).collect()}
     assert a == b
+
+
+def test_language_model_null_text(spark):
+    # ADVICE r6 (low): NULL text crashed RegexTokenizer inside the
+    # model-based classifier; the heuristic path tolerates NULLs.
+    from jobanalytics_bigdataproject_spark.ml.language import (
+        doc_language_classifier,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog and runs away"),
+            (2, None),
+            (3, "el perro corre por la calle y salta sobre la mesa grande"),
+        ],
+        "doc_id int, text string",
+    )
+    out = doc_language_classifier(docs, text_col="text")
+    rows = {r.doc_id: r for r in out.collect()}
+    assert set(rows) == {1, 2, 3}
+    assert rows[2].predicted_lang is not None  # scored (fallback), not crashed
+
+
+def test_language_model_no_tmpdir_leak(spark, tmp_path, monkeypatch):
+    # ADVICE r6 (low): every save/load round-trip left a mkdtemp behind.
+    import tempfile
+
+    from jobanalytics_bigdataproject_spark.ml.language import (
+        doc_language_classifier,
+    )
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    tempfile.tempdir = None  # force re-read of TMPDIR
+    try:
+        docs = spark.createDataFrame(
+            [
+                (i, "the quick brown fox jumps over the lazy dog again and again")
+                for i in range(30)
+            ]
+            + [
+                (100 + i, "el perro grande corre por la calle y salta la mesa")
+                for i in range(30)
+            ],
+            "doc_id int, text string",
+        )
+        doc_language_classifier(docs, text_col="text").collect()
+        leftovers = [
+            p
+            for p in glob.glob(str(tmp_path / "*"))
+            if os.path.isdir(p)
+        ]
+        assert leftovers == []
+    finally:
+        tempfile.tempdir = None

@@ -414,6 +414,33 @@ def test_recall_report_scope_releases_pinned_frames(spark, tables, tmp_path):
     assert similarity._RECALL_PINNED == []
 
 
+def test_recall_report_failing_arm_releases_pinned_arms(
+    spark, tables, tmp_path, monkeypatch
+):
+    """One arm raising must not leak the arms that already persisted:
+    every frame is registered for release the moment it is pinned, so
+    leaving recall_report_scope() restores the persistent-RDD count."""
+    path = str(tmp_path / "ivf_fail")
+    similarity.ivf_build_index(tables["embeddings"], path, n_clusters=4)
+    q = tables["embeddings"].filter(F.col("vec_id") < 3)
+    real_ivf_query = similarity.ivf_query
+
+    def ivf_query(spark, index_path, queries, k, n_probe):
+        if n_probe == 2:
+            raise RuntimeError("probe failed")
+        return real_ivf_query(spark, index_path, queries, k=k, n_probe=n_probe)
+
+    monkeypatch.setattr(similarity, "ivf_query", ivf_query)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="probe failed"):
+        with similarity.recall_report_scope():
+            similarity.ann_recall_report(
+                spark, tables["embeddings"], q, path, k=3, probes=(1, 2)
+            )
+    assert jsc.getPersistentRDDs().size() == before
+
+
 # --- semantic dedup on arrival (VERDICT r9 #4) ------------------------------
 
 

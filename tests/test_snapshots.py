@@ -5,6 +5,7 @@ optimistic-commit retry when a competing manifest lands first."""
 from __future__ import annotations
 
 import datetime
+import decimal
 import json
 import os
 
@@ -2387,3 +2388,87 @@ def test_optimize_preserves_evolved_schema(spark, tdir):
     out = sn.read_snapshot(spark, d2, merge_schema=True)
     assert out.count() == 78
     assert out.filter("extra IS NOT NULL").count() == 39
+
+
+# --- decimal stats across a magnitude boundary ------------------------------
+# String stats compare lexicographically ('9.5' > '10.00'), so numeric
+# caller bounds must force exact-Decimal comparison in every stats tier.
+
+D = decimal.Decimal
+
+
+@pytest.fixture()
+def dec_table(spark, tmp_path):
+    """Two files of DECIMAL(10,2) prices, one per side of the 10.00
+    magnitude boundary plus one straddler — the lexicographic trap."""
+    t = str(tmp_path / "dec_tbl")
+    lowf = spark.createDataFrame(
+        [(1, D("8.10")), (2, D("8.90"))], "id int, price decimal(10,2)"
+    ).repartition(1)
+    straddle = spark.createDataFrame(
+        [(3, D("9.50")), (4, D("10.50"))], "id int, price decimal(10,2)"
+    ).repartition(1)
+    highf = spark.createDataFrame(
+        [(5, D("11.00")), (6, D("12.00"))], "id int, price decimal(10,2)"
+    ).repartition(1)
+    sn.write_snapshot(lowf, t, mode="overwrite", stats_cols=["price"])
+    sn.write_snapshot(straddle, t, stats_cols=["price"])
+    sn.write_snapshot(highf, t, stats_cols=["price"])
+    return t
+
+
+def test_decimal_prune_keeps_straddler(spark, dec_table):
+    # ADVICE r6 (medium): min='9.50' > hi='10.00' lexicographically, so
+    # the straddling file was silently pruned. prune is file-granular —
+    # apply the row filter on top, like every caller must.
+    got = (
+        sn.read_snapshot(
+            spark, dec_table, prune={"price": (D("9.80"), D("10.00"))}
+        )
+        .where(F.col("price").between(D("9.80"), D("10.00")))
+        .collect()
+    )
+    # the straddler holds no row in [9.80, 10.00] but MUST be scanned;
+    # widen slightly to prove rows actually survive
+    got2 = (
+        sn.read_snapshot(
+            spark, dec_table, prune={"price": (D("9.40"), D("10.00"))}
+        )
+        .select("id")
+        .where(F.col("price").between(D("9.40"), D("10.00")))
+        .collect()
+    )
+    assert got == []
+    assert sorted(r.id for r in got2) == [3]
+
+
+def test_decimal_prune_still_skips_disjoint(spark, dec_table):
+    # numeric-domain compare must still PRUNE what is provably disjoint:
+    # only the low file overlaps [8.00, 8.95]
+    df = sn.read_snapshot(spark, dec_table, prune={"price": (D("8.00"), D("8.95"))})
+    assert sorted(r.id for r in df.collect()) == [1, 2]
+    assert df.inputFiles() and len(df.inputFiles()) == 1
+
+
+def test_decimal_count_where_magnitude_boundary(spark, dec_table):
+    out = sn.count_where(spark, dec_table, "price", D("9.00"), D("11.50"))
+    truth = (
+        sn.read_snapshot(spark, dec_table)
+        .where(F.col("price").between(D("9.00"), D("11.50")))
+        .count()
+    )
+    assert out["n_rows"] == truth == 3
+    # the fully-covered high file [11.00, 12.00] ⊄ [9.00, 11.50]; the low
+    # file [8.10, 8.90] is provably disjoint and must be skipped
+    assert out["files_skipped"] >= 1
+
+
+def test_decimal_delete_range(spark, dec_table):
+    res = sn.delete_range(spark, dec_table, "price", D("10.90"), D("12.50"))
+    # [11.00, 12.00] is fully covered by [10.90, 12.50] → zero-I/O drop
+    # (rows_deleted counts the dropped file's rows; nothing rewritten)
+    assert res["files_dropped"] == 1 and res["files_rewritten"] == 0
+    left = sorted(
+        r.id for r in sn.read_snapshot(spark, dec_table).select("id").collect()
+    )
+    assert left == [1, 2, 3, 4]  # 11.00 and 12.00 gone, straddler kept

@@ -32,14 +32,16 @@ Exit 0 = in lockstep; exit 1 = drift, with the drift printed.
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BEGIN = "<!-- BEGIN GENERATED QUERY APPENDIX (tools/check_coverage.py) -->"
 END = "<!-- END GENERATED QUERY APPENDIX -->"
-PATH = "/root/repo/COVERAGE.md"
+PATH = os.path.join(ROOT, "COVERAGE.md")
 
 
 def _appendix(names: list[str], oracle: set[str]) -> str:
@@ -106,7 +108,7 @@ def check_evidence() -> list[str]:
     oracle = set(entry.oracle_sql())
     last: dict[str, int] = {}
     max_round = 0
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"r(\d+)", path.rsplit("/", 1)[-1])
         if not m:
             continue
