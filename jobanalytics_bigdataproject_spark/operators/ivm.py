@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from jobanalytics_bigdataproject_spark.sources import snapshots as sn
@@ -120,11 +120,3 @@ def maintain_sum_agg(
     )
     return head
 
-
-def read_sum_agg(spark: SparkSession, agg_dir: str) -> DataFrame:
-    """The maintained aggregate with the derived mean (cents → currency
-    at read time, so the stored partials stay associative)."""
-    return sn.read_snapshot(spark, agg_dir).select(
-        "*",
-        (F.col("sum_cents") / F.lit(100.0) / F.col("cnt")).alias("avg_value"),
-    )

@@ -129,29 +129,6 @@ def srp_bucket_expr(vec: str, bits: int = 8, dim: int = 64, offset: int = 0) -> 
 _SRP_EXPR_CACHE: dict[tuple, Column] = {}
 
 
-def srp_bucket(vec: Column, bits: int = 8, dim: int = 64) -> Column:
-    """Column-API form of ``srp_bucket_expr`` for composability; delegates
-    to the string form when given a plain column name."""
-    if isinstance(vec, str):
-        return srp_bucket_expr(vec, bits, dim)
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(b * dim), F.lit(b * dim + dim - 1)),
-                lambda x, j: x.cast("double")
-                * F.when(F.xxhash64(j).bitwiseAND(F.lit(1)) == 1, 1.0).otherwise(-1.0),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out = out.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        )
-    return out
-
-
 def cosine_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,

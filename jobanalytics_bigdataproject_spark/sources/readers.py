@@ -10,11 +10,22 @@ parquet (02:14, 03:13, 04:10). Our engine keeps those two sources, but:
 - Parquet reads go through one helper so column pruning / predicate
   pushdown can be asserted in tests (``.explain`` shows ``PushedFilters``
   and a narrowed ``ReadSchema``).
+
+``read_table`` infers a table's schema once per process. Inference is a
+Spark job that reads a parquet footer, and a declared query reads its
+tables on every call. The inferred ``StructType`` is kept per regular
+local file, keyed by ``(realpath, st_mtime_ns, st_size)``, so a file
+rewritten in place is inferred again; a hit passes the schema to the
+reader and launches no job. Anything else (a directory, a non-local URI,
+a path that cannot be ``stat``-ed) is inferred on every call. Only the
+schema is kept: each call still builds a fresh relation with fresh
+attribute ids (see the self-join note in ``fan_out_scan``).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,6 +199,22 @@ def _ensure_session_conf(spark: SparkSession) -> None:
         pass
 
 
+_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
+
+
+def _schema_key(path: str) -> tuple[str, int, int] | None:
+    """``(realpath, st_mtime_ns, st_size)`` of a regular local file, else
+    None (a directory, a non-local URI, a failed ``stat``)."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return real, st.st_mtime_ns, st.st_size
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one star-schema table (reference S2).
 
@@ -198,11 +225,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     epoch-ns is ~1.7e18). DuckDB performs the same ns→us truncation, so
     both engines see identical timestamps."""
     _ensure_session_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    ts_type = dict(df.dtypes).get("ts")
-    if name == "events" and ts_type == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key:
+            _SCHEMAS[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    ts_type = schema["ts"].dataType if "ts" in schema.fieldNames() else None
+    if name == "events" and isinstance(ts_type, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif name == "events" and ts_type == "timestamp_ntz":
+    elif name == "events" and isinstance(ts_type, T.TimestampNTZType):
         # Parquet TIMESTAMP(isAdjustedToUTC=false) arrives as TIMESTAMP_NTZ;
         # with the session pinned to UTC the cast is value-preserving, and it
         # restores the TIMESTAMP(LTZ) type that unix_micros/window() require.

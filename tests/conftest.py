@@ -41,6 +41,13 @@ finally:
         sys.path.remove(_PBSHIM_DIR)
 
 
+def pytest_configure(config):
+    # print the slowest tests of every run, so the one that eats the suite's
+    # time budget is named; an explicit --durations still wins
+    if config.option.durations is None:
+        config.option.durations = 25
+
+
 @pytest.fixture(scope="session")
 def spark():
     from jobanalytics_bigdataproject_spark.session import get_spark

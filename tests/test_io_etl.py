@@ -4,6 +4,8 @@ write (partition pruning), and the end-to-end cleaning pipeline."""
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -228,3 +230,66 @@ def test_schema_evolution_mergeschema_read(spark, tables, tmp_path):
     assert merged.filter(F.col("region_tag").isNull()).count() == v1.count()
     # without mergeSchema the footer picked may hide the new column — the
     # explicit option is the contract, not a default behavior assumption
+
+
+# ------------------------------------------------ read_table schema memo
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(fn's result, ids of the Spark jobs fn launched in this thread)."""
+    sc = spark.sparkContext
+    group = f"read-table-{next(_GROUPS)}"
+    sc.setJobGroup(group, "read_table")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # status stores are fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_table_infers_a_file_schema_once(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"a": [1, 2, 3]}), tmp_path / "t.parquet")
+    first, jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert jobs, "a new file's schema is inferred by a footer-reading job"
+    again, jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert jobs == []
+    assert again.schema == first.schema
+    assert sorted(r.a for r in again.collect()) == [1, 2, 3]
+    # events: the ns→us conversion keys off the memoized schema too
+    events = [read_table(spark, SF_DIR, "events") for _ in range(2)]
+    _, jobs = _jobs(spark, lambda: read_table(spark, SF_DIR, "events"))
+    assert jobs == []
+    assert all(isinstance(e.schema["ts"].dataType, T.TimestampType) for e in events)
+    assert events[0].agg(F.max("ts")).first() == events[1].agg(F.max("ts")).first()
+
+
+def test_read_table_reinfers_a_file_rewritten_in_place(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    df, jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert jobs, "a rewritten file is inferred again"
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
+def test_read_table_directory_is_inferred_every_call(spark, tmp_path):
+    path = str(tmp_path / "d.parquet")
+    spark.range(4).write.parquet(path)
+    assert sorted(r.id for r in read_table(spark, str(tmp_path), "d").collect()) == [0, 1, 2, 3]
+    spark.range(2).withColumn("b", F.lit("x")).write.mode("overwrite").parquet(path)
+    df, jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "d"))
+    assert jobs, "a directory is read through inference"
+    assert df.columns == ["id", "b"] and df.count() == 2

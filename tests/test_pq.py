@@ -3,8 +3,6 @@ scan shape, measured recall with and without exact refine."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,17 +10,17 @@ from jobanalytics_bigdataproject_spark.operators import pq, similarity
 
 
 @pytest.fixture(scope="module")
-def pq_index(spark, tables):
+def pq_index(spark, tables, tmp_path_factory):
     emb = tables["embeddings"]
-    path = tempfile.mkdtemp(prefix="pqtest_") + "/pq"
+    path = str(tmp_path_factory.mktemp("pqtest") / "pq")
     pq.pq_build_index(emb, path, m=8, k=16, sample_n=500)
     return path, emb
 
 
-def test_build_is_deterministic(spark, tables):
+def test_build_is_deterministic(spark, tables, tmp_path):
     emb = tables["embeddings"]
-    p1 = tempfile.mkdtemp(prefix="pqd1_") + "/pq"
-    p2 = tempfile.mkdtemp(prefix="pqd2_") + "/pq"
+    p1 = str(tmp_path / "pq1")
+    p2 = str(tmp_path / "pq2")
     pq.pq_build_index(emb, p1, m=4, k=8, sample_n=200)
     pq.pq_build_index(emb, p2, m=4, k=8, sample_n=200)
     c1 = sorted((r.vec_id, tuple(r.codes)) for r in spark.read.parquet(f"{p1}/codes").collect())
@@ -65,7 +63,7 @@ def test_refined_recall_on_fixture(spark, pq_index):
     assert len(refined & brute) / len(brute) >= 0.6
 
 
-def test_pq_on_clustered_data_finds_cluster_members(spark):
+def test_pq_on_clustered_data_finds_cluster_members(spark, tmp_path):
     """Planted near-duplicate clusters: the quantizer collapses members to
     the same codes, so ADC+refine must return intra-cluster neighbors."""
     import numpy as np
@@ -81,7 +79,7 @@ def test_pq_on_clustered_data_finds_cluster_members(spark):
             rows.append((vid, [float(x) for x in v]))
             vid += 1
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = tempfile.mkdtemp(prefix="pqc_") + "/pq"
+    path = str(tmp_path / "pq")
     pq.pq_build_index(emb, path, m=8, k=16, sample_n=40)
     q = emb.filter(F.col("vec_id").isin(0, 5, 10))
     out = pq.pq_query(spark, path, q, k=4, refine=16, embeddings=emb).collect()
@@ -92,9 +90,9 @@ def test_pq_on_clustered_data_finds_cluster_members(spark):
 
 
 @pytest.fixture(scope="module")
-def ivfpq_index(spark, tables):
+def ivfpq_index(spark, tables, tmp_path_factory):
     emb = tables["embeddings"]
-    path = tempfile.mkdtemp(prefix="ivfpqtest_") + "/ivfpq"
+    path = str(tmp_path_factory.mktemp("ivfpqtest") / "ivfpq")
     pq.ivfpq_build_index(emb, path, n_clusters=4, m=8, k=16, sample_n=500)
     return path, emb
 
@@ -171,7 +169,7 @@ def test_ivfpq_refined_recall_on_fixture(spark, ivfpq_index):
     assert len(refined & brute) / len(brute) >= 0.5
 
 
-def test_ivfpq_append_finds_planted_twins(spark):
+def test_ivfpq_append_finds_planted_twins(spark, tmp_path):
     """Incremental ingest: build on half the planted clusters' members,
     append the other half with the STORED codebooks/centroids, and the
     refined query of a built vector must surface its appended twin."""
@@ -190,7 +188,7 @@ def test_ivfpq_append_finds_planted_twins(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     built = emb.filter((F.col("vec_id") % 4) < 2)     # 2 members per cluster
     appended = emb.filter((F.col("vec_id") % 4) >= 2)  # the other 2
-    path = tempfile.mkdtemp(prefix="ivfpqa_") + "/ivfpq"
+    path = str(tmp_path / "ivfpq")
     pq.ivfpq_build_index(built, path, n_clusters=3, m=8, k=8, sample_n=12)
     pq.ivfpq_append(spark, appended, path)
 
@@ -217,7 +215,7 @@ def test_ivfpq_streaming_ingest_foreachbatch(spark, tables, tmp_path):
     built = emb.filter(F.col("vec_id") < 300)
     incoming = emb.filter(F.col("vec_id") >= 300)
     n_total = emb.count()
-    path = tempfile.mkdtemp(prefix="ivfpqs_") + "/ivfpq"
+    path = str(tmp_path / "ivfpq")
     pq.ivfpq_build_index(built, path, n_clusters=4, m=8, k=16, sample_n=300)
 
     src = str(tmp_path / "vec_stream")
